@@ -1,38 +1,73 @@
-"""Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "sf": ...}.
+"""Benchmark harness, and the one measurement loop every timing tool shares.
 
-Queries are fully executed via the noop sink (whole plan runs, nothing is
-collected to the driver — measures engine time, not toPandas serialization).
+``python bench.py [--repeats N] [name ...]`` times the named entries
+(default: every entry) at $SPARK_GRAFT_SF_DIR (default
+``catalog.DEFAULT_SF_DIR``) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
+line: {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: sec, ...}, "sf": ..., "calibration": {...}}.
 
-``--repeats N`` runs every query N times back-to-back and records the
-per-query MEDIAN (plus a compact min/max spread) — use ≥3 when recording
+An entry is a registered query or a production twin (``base@backend``,
+tools/prod_variants.py). Entries are fully executed via the noop sink
+(whole plan runs, nothing is collected to the driver — measures engine
+time, not toPandas serialization).
+
+The measurement loop, shared by the tools under tools/: ``resolve`` maps
+names to thunks, ``warm_up`` runs a fixed untimed list, ``run_once`` runs
+one entry through the noop sink, and ``measure`` aggregates repeats.
+Invariant: the timer stops before the scratch release, and the release
+runs in ``finally``, so an entry that fails after persisting scratch
+cannot leak it into the next one.
+
+``--repeats N`` runs every entry N times back-to-back and records the
+per-entry MEDIAN (plus a compact min/max spread) — use ≥3 when recording
 the repo-root ``benchmarks_*.json`` artifacts so a single unlucky draw
-(r8's full_curation_funnel@xxh64 at 2x its median) can't become the
-authoritative number. Default 1, so the driver's per-round run stays one
-pass.
+can't become the authoritative number. Default 1, so a default run stays
+one pass.
 
 Every artifact also carries a ``calibration`` block: a fixed-work
 pure-Python loop and a fixed tiny Spark job, timed on THIS host in THIS
 session. Round-over-round comparisons divide by the calibration ratio
-(tools/scale_report.py --normalize) so a 1.4x-slower host (r7+r8 both
-recorded on degraded hosts) no longer masquerades as a code regression.
+(tools/scale_report.py --normalize) so a slower host does not masquerade
+as a code regression.
 """
 
 from __future__ import annotations
 
+import argparse
+import functools
 import json
 import os
 import statistics
 import sys
 import time
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from pyspark.sql import DataFrame, SparkSession
+
+from simtradedata_spark.catalog import DEFAULT_SF_DIR
 from simtradedata_spark.functions.caching import release_scratch
 from simtradedata_spark.queries import QUERIES
 from simtradedata_spark.session import get_spark
+from tools.prod_variants import prod_variants
+
+Thunk = Callable[[], DataFrame]
+
+# JIT tiering keeps inflating queries for the first ~30 s of a session, so
+# warming one entry is not enough: warm the first three entries in
+# canonical order plus one scan, window-function, Arrow-batch,
+# tokenize/HOF/n-gram and md5-minhash-banding query, so each engine path is
+# compiled before anything is timed (a cold first draw of the n-gram and
+# banding families measured 2-3x their steady state).
+WARM_NAMES = list(dict.fromkeys(
+    n
+    for n in sorted(QUERIES)[:3] + [
+        "active_nations", "supplier_moving_avg", "quality_classifier",
+        "dup_gram_coverage", "minhash_near_dups",
+    ]
+    if n in QUERIES
+))
 
 
 def calibration_probe(spark) -> dict[str, float]:
@@ -65,146 +100,141 @@ def calibration_probe(spark) -> dict[str, float]:
     }
 
 
-def run_query(fn, spark, sf_dir: str) -> float:
-    t0 = time.time()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    dt = time.time() - t0
-    # Several operators persist()/localCheckpoint() intermediates (minhash
-    # signatures, CC edge lists, the RFM frame). Across a 120+-query session
-    # those pile up in storage memory and slow LATER queries by seconds
-    # (measured +30 s on the bench tail) — free the scratch between queries
-    # so each number reflects the query, not its predecessors' leftovers.
-    # Session-lifetime memos (synthetic-market checkpoint, PTrade pinned
-    # tables) are protected and survive; blanket clearCache() killed those
-    # and cost the market-query family +3 s each.
+def resolve(
+    spark: SparkSession, sf_dir: str, names: list[str] | None = None
+) -> dict[str, Thunk]:
+    """Map entry names to thunks that build their DataFrames, in the order
+    given. ``None`` means every entry in canonical order: the registry
+    alphabetically, then the production twins. The order is fixed rather
+    than the registry's (whose front is the rotating correctness window)
+    because session position measurably moves sub-second entries.
+
+    Raises ValueError on an unknown name; a name without ``@`` cannot be a
+    twin, so it is rejected before the twins' tables are loaded."""
+    if names is None:
+        return {
+            **resolve(spark, sf_dir, sorted(QUERIES)),
+            **prod_variants(spark, sf_dir),
+        }
+    twins: dict[str, Thunk] = {}
+    unknown = [n for n in names if n not in QUERIES and "@" not in n]
+    if not unknown and any(n not in QUERIES for n in names):
+        twins = prod_variants(spark, sf_dir)
+        unknown = [n for n in names if n not in QUERIES and n not in twins]
+    if unknown:
+        raise ValueError(f"unknown entries: {unknown}")
+    return {
+        n: functools.partial(QUERIES[n][0], spark, sf_dir)
+        if n in QUERIES
+        else twins[n]
+        for n in names
+    }
+
+
+def sink(df: DataFrame) -> None:
+    """Execute the whole plan through the noop sink, collecting nothing."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def release(spark: SparkSession) -> None:
+    """Free the session's scratch between entries and nudge the JVM GC.
+
+    Operators persist/localCheckpoint intermediates (minhash signatures, CC
+    edge lists, the RFM frame); left in storage memory they slow later
+    entries by seconds. Session-lifetime memos (synthetic-market
+    checkpoint, PTrade pinned tables) are protected and survive. The GC
+    lets the ContextCleaner drop earlier entries' shuffle files and freed
+    block references, which otherwise pile up until the session tail runs
+    many times slower (purchases_within_7d 18.2 s at position 99 vs 0.75 s
+    with the nudge; same-host sf0.1 totals 502 s without vs 376 s with)."""
     release_scratch(spark)
-    # Nudge the ContextCleaner (same fix bench_scale_point.py carries from
-    # r7): across a 189-query session the freed-block references and
-    # shuffle files of earlier queries pile up until the JVM GCs, and on a
-    # slow host the session TAIL measured up to 28x its r7 value
-    # (purchases_within_7d 18.2 s at position 99 vs 0.75 s with this nudge
-    # — position bias, not query cost; entries >5x clustered at positions
-    # 99-164 and vanished once the cleaner ran per-query: same-host
-    # back-to-back totals 502 s without vs 376 s with).
     spark.sparkContext._jvm.System.gc()
-    return dt
+
+
+def run_once(spark: SparkSession, thunk: Thunk) -> float:
+    """Build and execute one entry; return its wall seconds. The timer
+    stops before ``release``, which runs even when the entry raises."""
+    t0 = time.time()
+    try:
+        sink(thunk())
+        return time.time() - t0
+    finally:
+        release(spark)
+
+
+def warm_up(
+    spark: SparkSession, sf_dir: str, names: list[str] = WARM_NAMES
+) -> None:
+    """Run each named entry once, untimed. A failure is reported on
+    stderr, never raised: warm-up must not kill the run."""
+    for name, thunk in resolve(spark, sf_dir, names).items():
+        try:
+            run_once(spark, thunk)
+        except Exception as e:
+            print(f"warm-up error in {name}: {e}", file=sys.stderr)
+
+
+def measure(
+    spark: SparkSession, name: str, thunk: Thunk, repeats: int = 1
+) -> dict:
+    """Run one entry ``repeats`` times back-to-back.
+
+    Returns ``value``: the median of the successful runs, NEGATED when any
+    run failed (-1.0 when every run failed), so a failure shows in the
+    headline itself and stays out of >=0-filtered totals; ``errors``: the
+    failed-run count; ``runs``/``min``/``max``: over the successful runs
+    (min/max -1.0 when there are none)."""
+    runs = []
+    for _ in range(repeats):
+        try:
+            runs.append(round(run_once(spark, thunk), 3))
+        except Exception as e:  # a failed entry must not hide the others
+            print(f"bench error in {name}: {e}", file=sys.stderr)
+    errors = repeats - len(runs)
+    med = round(statistics.median(runs), 3) if runs else 1.0
+    return {
+        "value": -med if errors else med,
+        "errors": errors,
+        "runs": runs,
+        "min": min(runs, default=-1.0),
+        "max": max(runs, default=-1.0),
+    }
 
 
 def main() -> None:
-    repeats = 1
-    argv = sys.argv[1:]
-    if "--repeats" in argv:
-        i = argv.index("--repeats")
-        try:
-            repeats = int(argv[i + 1])
-        except (IndexError, ValueError):
-            sys.exit("usage: bench.py [--repeats N]  (N >= 1)")
-        if repeats < 1:
-            sys.exit("--repeats must be >= 1")
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--repeats", type=int, default=1,
+                    help="runs per entry; the median is recorded")
+    ap.add_argument("names", nargs="*", help="entries to time (default: all)")
+    args = ap.parse_args()
+    if args.repeats < 1:
+        ap.error("--repeats must be >= 1")
+    sf_dir = DEFAULT_SF_DIR
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    # input-size-derived initial shuffle partitions: floors at cores for the
-    # driver scales (plans unchanged), rises toward 4x cores at 10-100x
-    # replicas where the pinned-cores ceiling measurably spills
+    # input-size-derived initial shuffle partitions
     spark = get_spark("bench", input_dir=sf_dir)
-
-    # Warm up JVM/codegen/Arrow paths so the first timed queries don't eat
-    # session start-up. Warming only the first entry proved insufficient in
-    # r4: JIT tiering keeps inflating queries for the first ~30 s of the
-    # session, which manufactured phantom 2-3x "regressions" for whatever
-    # the front-window rotation put early. Warm the cheapest scan plus the
-    # first THREE registry entries, plus one window-function and one
-    # Arrow-batch query so those engine paths are compiled too.
-    # canonical order here too — warming "the first 3" of a rotating
-    # registry made warm-up composition drift round to round
-    warm_names = sorted(QUERIES)[:3] + [
-        "active_nations", "supplier_moving_avg", "quality_classifier",
-        # tokenize/HOF/n-gram codegen: the ExactSubstr + sketch families sit
-        # at window positions 7-10, early enough to eat residual JIT without
-        # this (measured 8.2 s first-run vs 3.7-4.4 s steady-state for
-        # cross_doc_dup_coverage in the r5d recording)
-        "dup_gram_coverage",
-        # md5-minhash banding codegen (r11): the one heavy engine path the
-        # list above never touches — its first cold draw measured 9.6 s vs
-        # 3.5 s steady-state for incremental_dedup (same mechanism as the
-        # r5d cross_doc recording), and the funnel/dedup/incremental family
-        # all ride it. Warming the cheapest family member keeps JIT
-        # tiering out of ~8 timed entries.
-        "minhash_near_dups",
-    ]
-    for warm in dict.fromkeys(n for n in warm_names if n in QUERIES):
-        QUERIES[warm][0](spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        release_scratch(spark)
-
+    try:
+        entries = resolve(spark, sf_dir, args.names or None)
+    except ValueError as e:
+        ap.error(str(e))
+    warm_up(spark, sf_dir)
     calibration = calibration_probe(spark)
 
     timings: dict[str, float] = {}
     spread: dict[str, dict] = {}
     errors: dict[str, int] = {}
-
-    def _record(name: str, thunk) -> None:
-        runs = []
-        for _ in range(repeats):
-            try:
-                runs.append(round(thunk(), 3))
-            except Exception as e:  # a failed query must not hide the others
-                print(f"bench error in {name}: {e}", file=sys.stderr)
-        # A query that failed on ANY run gets a NEGATIVE headline entry
-        # (-median, or -1.0 when every run failed) so intermittent
-        # failures surface in `timings` itself — the pre-repeats -1.0
-        # convention, and what keeps it out of the >=0-filtered totals —
-        # plus an `errors` count (r9 advisory: the count living only in
-        # `spread` let a flaky query report a clean median).
-        med = round(statistics.median(runs), 3) if runs else 1.0
-        n_err = repeats - len(runs)
-        timings[name] = -med if n_err else med
-        if n_err:
-            errors[name] = n_err
-        if repeats > 1:
-            spread[name] = {
-                "min": min(runs) if runs else -1.0,
-                "max": max(runs) if runs else -1.0,
-                "errors": n_err,
-            }
-
-    # CANONICAL (alphabetical) timing order, decoupled from registry order:
-    # the registry's front 50 is the driver-gate rotation window and
-    # changes every round, and bench position measurably moves sub-second
-    # queries (r10 measurement: entries moved >30 slots later read 1.27x,
-    # earlier 0.94x — session JIT/GC state, not code). A fixed order makes
-    # per-query numbers comparable across rounds regardless of rotation.
-    for name in sorted(QUERIES):
-        fn = QUERIES[name][0]
-        _record(name, lambda: run_query(fn, spark, sf_dir))
-
-    # Production-backend variants (shared definitions in
-    # tools/prod_variants.py so bench_scale_point.py measures the SAME
-    # twins at the 10x/100x scale points — r6 verdict item 1): the
-    # registered queries run md5 / pinned sizes ONLY so the DuckDB oracle
-    # can recompute them; real callers get xxhash64, auto-sized blooms,
-    # LSH cosine, IVF ANN, GEMM SemDeDup. Bench both so the recorded
-    # numbers state production cost, not verification cost.
-    from tools.prod_variants import prod_variants
-
-    def _run_variant(thunk) -> float:
-        t0 = time.time()
-        try:
-            thunk().write.format("noop").mode("overwrite").save()
-            return time.time() - t0
-        finally:
-            release_scratch(spark)
-            spark.sparkContext._jvm.System.gc()
-
-    for name, thunk in prod_variants(spark, sf_dir).items():
-        _record(name, lambda: _run_variant(thunk))
+    for name, thunk in entries.items():
+        m = measure(spark, name, thunk, args.repeats)
+        timings[name] = m["value"]
+        if m["errors"]:
+            errors[name] = m["errors"]
+        if args.repeats > 1:
+            spread[name] = {k: m[k] for k in ("min", "max", "errors")}
 
     total = round(sum(t for t in timings.values() if t >= 0), 3)
-    # Sub-totals (round-3 verdict): the @xxh64/@lsh entries are PRODUCTION
-    # re-runs of five oracle-suite queries with the cheaper non-oracle hash
-    # backend — a naive grand total double-counts those families by ~8 s.
-    # oracle_suite_sec is the round-over-round comparable number.
+    # The @ entries re-run oracle-suite queries on production backends, so
+    # a grand total double-counts those families; oracle_suite_sec is the
+    # round-over-round comparable number.
     oracle_total = round(
         sum(t for n, t in timings.items() if t >= 0 and "@" not in n), 3
     )
@@ -216,7 +246,7 @@ def main() -> None:
         "production_variants_sec": round(total - oracle_total, 3),
         "queries": timings,
         "sf": sf,
-        "repeats": repeats,
+        "repeats": args.repeats,
         "calibration": calibration,
     }
     if errors:

@@ -135,63 +135,6 @@ def test_interval_join_stream_equals_batch(spark, tmp_path):
     assert got_set == expect_set
 
 
-def test_transform_with_state_running_stats(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas: state carries across
-    micro-batches and the final per-key stats equal the batch aggregate.
-    The API's worker protocol needs google.protobuf, absent in this
-    container — skip (not fail) where it is missing."""
-    import pytest
-
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState worker protocol requires protobuf",
-    )
-    from pyspark.sql import functions as F
-
-    from simtradedata_spark.catalog import load_table
-    from simtradedata_spark.streaming.tws import streaming_running_stats
-
-    src = str(tmp_path / "tws_src")
-    events = load_table(spark, "/root/testdata/sf0.001", "events").limit(500)
-    # several files -> several micro-batches (maxFilesPerTrigger=1)
-    events.repartition(3).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    q = streaming_running_stats(spark, src, schema, query_name="t_tws")
-    try:
-        q.processAllAvailable()
-        got = (
-            spark.sql(
-                """SELECT user_id, n_events, total_value, max_value FROM (
-                     SELECT *, row_number() OVER (
-                       PARTITION BY user_id ORDER BY n_events DESC) rn
-                     FROM t_tws) WHERE rn = 1"""
-            )
-            .toPandas()
-            .set_index("user_id")
-            .sort_index()
-        )
-    finally:
-        q.stop()
-
-    want = (
-        spark.read.parquet(src)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-            F.max("value").alias("max_value"),
-        )
-        .toPandas()
-        .set_index("user_id")
-        .sort_index()
-    )
-    assert len(got) == len(want)
-    assert (got["n_events"] == want["n_events"]).all()
-    assert (abs(got["total_value"] - want["total_value"]) < 1e-6).all()
-    assert (abs(got["max_value"] - want["max_value"]) < 1e-12).all()
-
-
 def test_session_exact_gap_merges(spark):
     """Pins the boundary convention SQL_SESSION_WINDOWS relies on: an event
     arriving EXACTLY gap after the previous one joins the same session

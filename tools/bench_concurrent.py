@@ -5,7 +5,10 @@ throughput, not per-query latency. This runs a fixed 16-query mix twice —
 serially, then from an 8-thread pool with the FAIR scheduler (each thread
 its own pool, so no query starves behind a long job's stages) — and
 reports the wall-time speedup. local[32] has the cores to overlap the
-scheduling gaps that serialize a single-query run.
+scheduling gaps that serialize a single-query run. Entries are resolved,
+warmed up and executed with bench.py's shared steps; scratch is released
+once per pass, not per query, since a session-wide release mid-pass would
+free scratch that other threads' queries are still reading.
 
 Usage: python tools/bench_concurrent.py [sf_dir]   → one JSON line
 """
@@ -20,8 +23,8 @@ from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from simtradedata_spark.functions.caching import release_scratch
-from simtradedata_spark.queries import QUERIES
+from bench import release, resolve, sink, warm_up
+from simtradedata_spark.catalog import DEFAULT_SF_DIR
 from simtradedata_spark.session import get_spark
 
 MIX = [
@@ -34,33 +37,31 @@ MIX = [
 ]
 
 
-def run_one(spark, sf_dir: str, name: str) -> None:
-    spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
-    QUERIES[name][0](spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
-        "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-    )
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR
     spark = get_spark(
-        "bench-concurrent", extra_conf={"spark.scheduler.mode": "FAIR"}
+        "bench-concurrent",
+        input_dir=sf_dir,
+        extra_conf={"spark.scheduler.mode": "FAIR"},
     )
-    for name in MIX[:2]:  # warm codegen/scan paths
-        run_one(spark, sf_dir, name)
-    release_scratch(spark)
+    entries = resolve(spark, sf_dir, MIX)
+    warm_up(spark, sf_dir, MIX[:2])
+
+    def run_one(name: str) -> None:
+        spark.sparkContext.setLocalProperty("spark.scheduler.pool", name)
+        sink(entries[name]())
 
     t0 = time.time()
     for name in MIX:
-        run_one(spark, sf_dir, name)
+        run_one(name)
     serial = time.time() - t0
-    release_scratch(spark)
+    release(spark)
 
     t0 = time.time()
     with ThreadPoolExecutor(max_workers=8) as pool:
-        list(pool.map(lambda n: run_one(spark, sf_dir, n), MIX))
+        list(pool.map(run_one, MIX))
     concurrent = time.time() - t0
-    release_scratch(spark)
+    release(spark)
 
     print(
         json.dumps(

@@ -9,6 +9,9 @@ than RAM and spread over 1000 executors. A query where Spark loses by far
 more than the scheduling floor (~0.3–0.5 s) is a real plan smell worth
 chasing, which is the actionable output here.
 
+Spark times come from bench.py's shared loop (same warm-up, noop sink and
+scratch release as the full bench).
+
 Usage: python tools/bench_vs_duckdb.py [sf_dir] [query ...] → one JSON line
 """
 
@@ -23,14 +26,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
-from simtradedata_spark.catalog import TESTDATA_TABLES
-from simtradedata_spark.functions.caching import release_scratch
+from bench import resolve, run_once, warm_up
+from simtradedata_spark.catalog import DEFAULT_SF_DIR, TESTDATA_TABLES
 from simtradedata_spark.queries import QUERIES
 from simtradedata_spark.session import get_spark
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF_DIR
     names = sys.argv[2:] or [n for n, (_f, sql) in QUERIES.items() if sql]
 
     con = duckdb.connect()
@@ -39,20 +42,19 @@ def main() -> None:
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"read_parquet('{sf_dir}/{t}.parquet')"
         )
-    spark = get_spark("bench-vs-duckdb")
-    QUERIES["active_nations"][0](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    spark = get_spark("bench-vs-duckdb", input_dir=sf_dir)
+    try:
+        entries = resolve(spark, sf_dir, names)
+    except ValueError as e:
+        sys.exit(str(e))
+    warm_up(spark, sf_dir)
 
     per: dict[str, dict[str, float]] = {}
-    for name in names:
-        fn, sql = QUERIES[name]
-        if not sql:
+    for name, thunk in entries.items():
+        sql = QUERIES.get(name, (None, None))[1]
+        if not sql:  # production twins and unoracled entries
             continue
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        t_spark = time.time() - t0
-        release_scratch(spark)
+        t_spark = run_once(spark, thunk)
         t0 = time.time()
         con.execute(sql).fetchall()
         t_duck = time.time() - t0

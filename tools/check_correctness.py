@@ -112,7 +112,7 @@ def main() -> int:
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
 
-    from simtradedata_spark.functions.caching import release_scratch
+    from bench import release
 
     failures = 0
     for name, fn in qs.items():
@@ -126,10 +126,7 @@ def main() -> int:
             failures += 1
             continue
         finally:
-            # same posture as bench.py: several operators persist scratch
-            # intermediates; across a 171-query session those accumulate in
-            # storage memory and slow the tail queries
-            release_scratch(spark)
+            release(spark)
         if name not in oracles:
             status = "ROWS-ONLY"
             print(f"{status:9s} {name}: rows={len(sdf)} ({time.time()-t0:.1f}s)")

@@ -7,15 +7,16 @@ session-accumulation artifacts. Suspects were named but unconfirmed:
 broadcast block accumulation (the r9 bloom shape held k ~0.7 GB
 HashedRelations per probe) vs old-gen fragmentation.
 
-This tool runs named queries/twins N times back-to-back in ONE session and
-records, AFTER each run (post scratch-release + System.gc, i.e. the state
-the NEXT run inherits):
+This tool runs named queries/twins N times back-to-back in ONE session
+through bench.py's shared loop and records, AFTER each run (post scratch
+release + GC nudge, i.e. the state the NEXT run inherits):
 
   - wall seconds
   - JVM heap used (Runtime total-free) and per-pool usage (old gen,
     humongous-feeding G1 regions) via ManagementFactory
   - Spark local-dir disk bytes (blockmgr + spill dirs)
-  - persistent-RDD count (scratch-release effectiveness)
+  - persistent RDDs left after the release (scratch-release
+    effectiveness)
   - memoryStore/diskStore bytes via BlockManager (package-private in
     Scala, public in bytecode — py4j reaches it; best-effort)
 
@@ -36,10 +37,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from simtradedata_spark.functions.caching import release_scratch
-from simtradedata_spark.queries import QUERIES
+from bench import resolve, run_once
 from simtradedata_spark.session import get_spark
-from tools.prod_variants import prod_variants
 
 
 def jvm_stats(spark) -> dict:
@@ -106,36 +105,24 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = get_spark("drift_probe", input_dir=args.sf_dir)
-    variants = prod_variants(spark, args.sf_dir)
+    try:
+        entries = resolve(spark, args.sf_dir, args.names)
+    except ValueError as e:
+        sys.exit(str(e))
     records = []
-    for name in args.names:
-        if name in QUERIES:
-            thunk = lambda: QUERIES[name][0](spark, args.sf_dir)  # noqa: E731
-        elif name in variants:
-            thunk = variants[name]
-        else:
-            sys.exit(f"unknown query {name}")
+    for name, thunk in entries.items():
         for run in range(1, args.runs + 1):
-            t0 = time.time()
-            err = None
+            rec = {"name": name, "run": run}
             try:
-                thunk().write.format("noop").mode("overwrite").save()
+                rec["wall_s"] = round(run_once(spark, thunk), 3)
             except Exception as e:
-                err = str(e)[:300]
-            wall = round(time.time() - t0, 3)
-            freed = release_scratch(spark)
-            spark.sparkContext._jvm.System.gc()
+                rec["wall_s"], rec["error"] = -1.0, str(e)[:300]
             time.sleep(1)  # let the ContextCleaner drain
-            rec = {
-                "name": name,
-                "run": run,
-                "wall_s": wall,
-                "freed_rdds": freed,
-                "local_dir_mb": round(local_dir_bytes(spark) / (1 << 20), 1),
-                **jvm_stats(spark),
-            }
-            if err:
-                rec["error"] = err
+            rec["persistent_rdds"] = (
+                spark.sparkContext._jsc.getPersistentRDDs().size()
+            )
+            rec["local_dir_mb"] = round(local_dir_bytes(spark) / (1 << 20), 1)
+            rec.update(jvm_stats(spark))
             records.append(rec)
             print(json.dumps(rec), flush=True)
     by_name: dict[str, list] = {}

@@ -20,7 +20,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from simtradedata_spark.queries import QUERIES
+from bench import resolve
+from simtradedata_spark.catalog import DEFAULT_SF_DIR
 from simtradedata_spark.session import get_spark
 
 
@@ -28,22 +29,14 @@ def main() -> None:
     if len(sys.argv) < 4:
         sys.exit(__doc__)
     out_dir, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("explain_dump", input_dir=sf_dir)
-    variants = None
-    for name in names:
-        if name in QUERIES:
-            df = QUERIES[name][0](spark, sf_dir)
-        else:
-            if variants is None:
-                from tools.prod_variants import prod_variants
-
-                variants = prod_variants(spark, sf_dir)
-            if name not in variants:
-                print(f"SKIP unknown query: {name}", file=sys.stderr)
-                continue
-            df = variants[name]()
+    spark = get_spark("explain_dump", input_dir=DEFAULT_SF_DIR)
+    try:
+        entries = resolve(spark, DEFAULT_SF_DIR, names)
+    except ValueError as e:
+        sys.exit(str(e))
+    for name, thunk in entries.items():
+        df = thunk()
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

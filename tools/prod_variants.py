@@ -1,7 +1,6 @@
-"""Production-backend variant definitions, shared by bench.py and
-tools/bench_scale_point.py (r6 verdict item 1: the twins must be measured
-at every scale point, so they need ONE definition, not two drifting
-copies).
+"""Production-backend variant definitions, resolved by ``bench.resolve``
+for bench.py and every timing tool, so the twins measured at each scale
+point have ONE definition, not drifting copies.
 
 The registry queries run md5 / pinned sizes ONLY so the DuckDB oracle can
 recompute them; real callers get xxhash64 (JVM-native), data-sized blooms,

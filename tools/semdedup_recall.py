@@ -23,8 +23,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import release
 from simtradedata_spark.catalog import load_table
-from simtradedata_spark.functions.caching import release_scratch
 from simtradedata_spark.operators.clustering import semantic_dedup_gemm
 from simtradedata_spark.operators.dedup import cosine_near_dups, grouped_cosine_pairs
 from simtradedata_spark.operators.similarity import _cell_udf, _train_centroids
@@ -73,7 +73,7 @@ def main() -> None:
         print(
             f"| {n_cells} | {n // n_cells} | {pr:.3f} | {ir:.3f} | {dt:.1f} |"
         )
-        release_scratch(spark)
+        release(spark)
 
     # The sweep above is the WORST case: this corpus's top pairwise cosine
     # is ~0.51, so every "near dup" at t=0.45 sits right at the decision
