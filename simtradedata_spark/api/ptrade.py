@@ -7,6 +7,19 @@ query over the tall tables and converts to pandas only at the client edge
 (the W5 shape layer) — a backtest day is a partition-pruned slice, never a
 network fetch (§3.2).
 
+Bar reads (``get_price``, ``get_history``, ``get_indicators``) have one
+path. ``_parse_freq`` maps the frequency to ``(resample, minutes)``;
+``_series`` is the one Spark frame builder, ``(symbol, trade_date,
+*fields)``, where minute rows carry the bar timestamp as ``trade_date``.
+Its strict end bound applies to the date before any resample or timestamp
+step. ``_query`` trims to the last ``count`` rows per symbol
+(``windows.trailing_n``) or, with ``point_cache=True``, slices the point
+cache: ``_series`` for one symbol with no bounds, pulled once per
+``(symbol, fq, minutes)``. Daily count mode is strictly before the end
+date (spec ``:1977``); minute count mode includes it (completed minutes
+are final). Every date-like input is normalised to ``yyyy-mm-dd`` by
+``_to_date_str``.
+
 Return shapes (``PTrade_API_mini_Reference.md:1826-1875,2015-2073``):
   - single security → pandas DataFrame indexed by date, columns = fields;
   - multiple securities, one field → DataFrame date × symbol;
@@ -17,6 +30,7 @@ Return shapes (``PTrade_API_mini_Reference.md:1826-1875,2015-2073``):
 from __future__ import annotations
 
 import hashlib
+import numbers
 from datetime import date as _date
 
 import pandas as pd
@@ -26,28 +40,37 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from simtradedata_spark.operators.adjust import adjust_bars
+from simtradedata_spark.operators.align import forward_fill
 from simtradedata_spark.operators.asof import asof_join
 from simtradedata_spark.operators.indicators import compute_indicators
+from simtradedata_spark.operators.resample import (
+    _session_minute_to_hhmm,
+    rebucket_minute_bars,
+    resample_ohlc,
+    time_bars_from_ticks,
+)
+from simtradedata_spark.operators.windows import trailing_n
 from simtradedata_spark.sources.tables import Warehouse
 
 BAR_FIELDS = ["open", "high", "low", "close", "volume", "money"]
 
 RESAMPLED_FIELDS = ["open", "high", "low", "close", "volume", "money", "n_bars"]
 
-# get_price frequency → resample_ohlc freq (None = native daily bars);
-# ("min", N) = N-minute intraday bars from the tick-derived minute store
-# (spec :521-694 minute mode — the reference warns and falls back to daily,
-# ptrade_data_api.py:58-61). "1m" (minute) and "1M" (month) are distinct
-# spec spellings — the lookup is deliberately case-sensitive.
+# frequency → (resample, minutes): resample is the resample_ohlc freq over
+# daily bars (None = native daily bars); minutes = N-minute intraday bars
+# from the tick-derived minute store (spec :521-694 minute mode — the
+# reference warns and falls back to daily, ptrade_data_api.py:58-61). "1m"
+# (minute) and "1M" (month) are distinct spec spellings — the lookup is
+# deliberately case-sensitive.
 _FREQUENCIES = {
-    "1d": None, "daily": None,
-    "1w": "W", "weekly": "W",
-    "1M": "M", "monthly": "M",
-    "1q": "Q", "quarterly": "Q",
-    "1y": "Y", "yearly": "Y",
-    "1m": ("min", 1), "minute": ("min", 1),
-    "5m": ("min", 5), "15m": ("min", 15),
-    "30m": ("min", 30), "60m": ("min", 60), "120m": ("min", 120),
+    "1d": (None, None), "daily": (None, None),
+    "1w": ("W", None), "weekly": ("W", None),
+    "1M": ("M", None), "monthly": ("M", None),
+    "1q": ("Q", None), "quarterly": ("Q", None),
+    "1y": ("Y", None), "yearly": ("Y", None),
+    "1m": (None, 1), "minute": (None, 1),
+    "5m": (None, 5), "15m": (None, 15),
+    "30m": (None, 30), "60m": (None, 60), "120m": (None, 120),
 }
 
 MINUTE_FIELDS = [
@@ -109,13 +132,29 @@ FUNDAMENTAL_TABLES = {
 
 
 def _to_date_str(d) -> str:
-    if isinstance(d, _date):
-        return d.isoformat()
-    s = str(d)
+    """Any date-like input → ``yyyy-mm-dd``. A datetime keeps only its date:
+    the caller's clock time must never admit that day's bar."""
+    s = d.isoformat() if isinstance(d, _date) else str(d)
     if len(s) == 8 and s.isdigit():  # YYYYMMDD (C2)
         return f"{s[:4]}-{s[4:6]}-{s[6:]}"
     return s[:10]
 
+
+def _parse_freq(frequency, fields=None) -> tuple[str | None, int | None]:
+    """``(resample, minutes)`` for a PTrade frequency; rejects fields the
+    frequency's bars do not carry."""
+    freq = _FREQUENCIES.get(frequency)
+    if freq is None:
+        raise ValueError(
+            f"frequency={frequency!r} not supported; one of {sorted(_FREQUENCIES)}"
+        )
+    resample, minutes = freq
+    allowed = MINUTE_FIELDS if minutes else RESAMPLED_FIELDS if resample else None
+    if allowed and fields:
+        bad = set(fields) - set(allowed)
+        if bad:
+            raise ValueError(f"fields {sorted(bad)} unavailable at {frequency}")
+    return freq
 
 
 def _minute_ts() -> Column:
@@ -149,21 +188,17 @@ class PTradeDataAPI:
         self._table_cache: dict[str, bool] = {}
         self._cache_tables = cache_tables
         self._cached: dict[str, DataFrame] = {}
-        # Client-side per-symbol daily-bar cache for POINT queries: the
+        # Client-side per-symbol bar cache for POINT queries: the
         # reference's v1.0 architecture is exactly this (SQLite + LRU,
         # 30 ms point lookups); a Spark job floor is ~250 ms however small
-        # the data, so repeated get_price point calls — the backtest event
-        # loop's access pattern — pull each symbol's bounded daily history
-        # ONCE through the normal Spark path (fq handling included) and
-        # slice it in pandas after that (~1 ms). Strictly a client-edge
-        # cache: per-symbol history is a few thousand rows; the 100 TB
-        # answer remains the vectorized batch path.
+        # the data, so the backtest event loop's repeated get_price /
+        # get_history calls pull each (symbol, fq, minutes) history ONCE
+        # through _series and slice it in pandas after that (~1 ms).
+        # Strictly a client-edge cache: per-symbol history is a few
+        # thousand daily or a few 10k minute rows; the 100 TB answer
+        # remains the vectorized batch path.
         self._point_cache = point_cache
-        self._sym_bars: dict[tuple[str, str], pd.DataFrame] = {}
-        # same idea at minute frequency: (symbol, fq, minutes) -> full
-        # minute-bar history (a few 10k rows/symbol) for the minute-level
-        # backtest loop
-        self._sym_minute: dict[tuple[str, str, int], pd.DataFrame] = {}
+        self._points: dict[tuple, pd.DataFrame] = {}
 
     def _table(self, name: str) -> DataFrame:
         if not self._cache_tables:
@@ -260,16 +295,6 @@ class PTradeDataAPI:
             cached = self._table_cache[name] = self.wh.exists(name)
         return cached
 
-    @staticmethod
-    def _resampled(bars: DataFrame, freq: str | None) -> DataFrame:
-        if freq is None:
-            return bars
-        from simtradedata_spark.operators.resample import resample_ohlc
-
-        return resample_ohlc(bars, freq).withColumnRenamed(
-            "period_start", "trade_date"
-        )
-
     def _minute_bars(
         self, securities, fq, start, end, minutes: int
     ) -> DataFrame:
@@ -280,11 +305,6 @@ class PTradeDataAPI:
         factors as daily bars (OHLC scaled, volume divided); ``money`` is
         actual turnover and ``vwap`` the raw traded price — neither is
         restated under adjustment."""
-        from simtradedata_spark.operators.resample import (
-            rebucket_minute_bars,
-            time_bars_from_ticks,
-        )
-
         if self._has_table("minute_bars"):
             mb = self._table_range("minute_bars", start, end)
         else:
@@ -293,258 +313,16 @@ class PTradeDataAPI:
             mb = rebucket_minute_bars(mb, minutes)
         mb = mb.filter(F.col("symbol").isin(securities))
         if fq in ("pre", "post"):
-            from simtradedata_spark.operators.adjust import adjust_bars
-
             mb = adjust_bars(mb, self._table("adjust_factor"), fq)
         return mb
-
-    def _get_price_minute(
-        self, securities, fq, start, end, fields, count, minutes: int
-    ):
-        """get_price minute mode (spec :521-694). Range mode is
-        date-inclusive; ``count`` mode returns the last ``count`` bars ON
-        OR BEFORE ``end_date`` — unlike daily count mode, the end date's
-        own session is included (minute queries exist to read the current
-        day; completed minutes are final, so there is no exclusive-of-today
-        lookahead hazard). The returned index is a full timestamp
-        (trade_date + bar start time)."""
-        if self._point_cache:
-            frames = [
-                self._point_minute_frame(s, fq, minutes) for s in securities
-            ]
-            out = self._point_slice(
-                frames, fields, start, end, count, end_inclusive=True
-            )
-            return self._shape(out, securities, fields)
-        mb = self._minute_bars(securities, fq, start, end, minutes)
-        pdf = self._minute_pdf(mb, fields, count)
-        return self._shape(pdf, securities, fields)
-
-    def _get_history_minute(
-        self, securities, fields, count, fq, cur, include, is_dict,
-        minutes: int, fill: str = "nan",
-    ):
-        """get_history minute mode: last ``count`` N-minute bars before
-        ``current_date`` (inclusive when ``include``), per symbol, with the
-        same timestamp index as get_price minute mode. ``fill='pre'``
-        densifies to the full session grid over trading days and carries
-        the previous close through suspension gaps (OHLC = carried close,
-        volume/money/n_ticks = 0, vwap null — the daily generator's
-        suspended-bar convention); bars before a symbol's first trade stay
-        null, mirroring the daily forward_fill contract."""
-        bad = set(fields) - set(MINUTE_FIELDS)
-        if bad:
-            raise ValueError(f"fields {sorted(bad)} unavailable at minute frequency")
-        if self._point_cache and fill != "pre":
-            return self._point_history(
-                securities, fields, count, fq, cur, include, is_dict,
-                frame_fn=lambda s: self._point_minute_frame(s, fq, minutes),
-            )
-        mb = self._minute_bars(securities, fq, None, cur, minutes)
-        if fill == "pre":
-            mb = self._densify_minute(mb, securities, minutes)
-        if cur:
-            mb = mb.filter(
-                F.col("trade_date") <= cur if include else F.col("trade_date") < cur
-            )
-        pdf = self._minute_pdf(mb, fields, count)
-        if is_dict:
-            return {
-                s: pdf[pdf.symbol == s].set_index("trade_date")[fields]
-                for s in securities
-            }
-        return self._shape(pdf, securities, fields)
-
-    def get_price(
-        self,
-        security,
-        start_date=None,
-        end_date=None,
-        frequency="1d",
-        fields=None,
-        fq=None,
-        count=None,
-    ):
-        """``ptrade_data_api.py:33-106`` / spec ``:1957-2108``.
-
-        count mode returns the ``count`` bars strictly BEFORE ``end_date``
-        (exclusive-of-today rule, spec ``:1977``); range mode is inclusive.
-
-        Beyond the reference (which warns and falls back to daily,
-        ``ptrade_data_api.py:58-61``): weekly/monthly/quarterly/yearly bars
-        are synthesized from adjusted daily bars via ``resample_ohlc`` (W4),
-        after the range filter so partially-covered edge periods aggregate
-        exactly the requested days. ``count`` then counts periods.
-        """
-        freq = _FREQUENCIES.get(frequency, KeyError)
-        if freq is KeyError:
-            raise ValueError(
-                f"frequency={frequency!r} not supported; one of {sorted(_FREQUENCIES)}"
-            )
-        securities = [security] if isinstance(security, str) else list(security)
-        if isinstance(freq, tuple):
-            fields = fields or BAR_FIELDS
-            bad = set(fields) - set(MINUTE_FIELDS)
-            if bad:
-                raise ValueError(f"fields {sorted(bad)} unavailable at {frequency}")
-            return self._get_price_minute(
-                securities,
-                fq,
-                _to_date_str(start_date) if (start_date and count is None) else None,
-                _to_date_str(end_date) if end_date else None,
-                fields,
-                count,
-                freq[1],
-            )
-        if freq is not None:
-            fields = fields or RESAMPLED_FIELDS
-            bad = set(fields) - set(RESAMPLED_FIELDS)
-            if bad:
-                raise ValueError(f"fields {sorted(bad)} unavailable at {frequency}")
-        else:
-            fields = fields or BAR_FIELDS
-        start = _to_date_str(start_date) if (start_date and count is None) else None
-        end = _to_date_str(end_date) if end_date else None
-        if (
-            self._point_cache
-            and freq is None
-            and set(fields) <= set(BAR_FIELDS)
-        ):
-            return self._point_get_price(securities, fq, start, end, fields, count)
-        bars = self._bars(securities, fq, start, end)
-        if count is not None:
-            if end:
-                # read_range bounded <= end; the exclusive-of-today rule
-                # (spec :1977) still needs the strict inequality
-                bars = bars.filter(F.col("trade_date") < end)
-            bars = self._resampled(bars, freq)
-            w = Window.partitionBy("symbol").orderBy(F.col("trade_date").desc())
-            bars = (
-                bars.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= count)
-                .drop("__rn")
-            )
-        else:
-            bars = self._resampled(bars, freq)
-        pdf = (
-            bars.select("symbol", "trade_date", *fields)
-            .orderBy("trade_date", "symbol")
-            .toPandas()
-        )
-        return self._shape(pdf, securities, fields)
-
-    def get_history(
-        self,
-        count,
-        frequency="1d",
-        field="close",
-        security_list=None,
-        fq=None,
-        include=False,
-        fill="nan",
-        is_dict=False,
-        current_date=None,
-    ):
-        """Spec ``:1774-1955``: last ``count`` bars before ``current_date``
-        (inclusive when ``include``). ``fill='pre'`` forward-fills suspension
-        gaps (W2)."""
-        securities = (
-            [security_list] if isinstance(security_list, str) else list(security_list)
-        )
-        fields = [field] if isinstance(field, str) else list(field)
-        cur = _to_date_str(current_date) if current_date else None
-        freq = _FREQUENCIES.get(frequency, KeyError)
-        if freq is KeyError:
-            raise ValueError(
-                f"frequency={frequency!r} not supported; one of {sorted(_FREQUENCIES)}"
-            )
-        if isinstance(freq, tuple):
-            return self._get_history_minute(
-                securities, fields, count, fq, cur, include, is_dict,
-                freq[1], fill,
-            )
-        # event-loop fast path: daily history from the per-symbol point
-        # cache (fill='pre' needs the Spark forward_fill; resampled
-        # frequencies fold from daily so they stay on the Spark path)
-        if (
-            self._point_cache
-            and freq is None
-            and fill != "pre"
-            and set(fields) <= set(BAR_FIELDS)
-        ):
-            return self._point_history(
-                securities, fields, count, fq, cur, include, is_dict,
-                frame_fn=lambda s: self._point_frame(s, fq),
-            )
-        bars = self._bars(securities, fq, end=cur)
-        if cur:
-            bars = bars.filter(
-                F.col("trade_date") <= cur if include else F.col("trade_date") < cur
-            )
-        bars = self._resampled(bars, freq)
-        if fill == "pre":
-            from simtradedata_spark.operators.align import forward_fill
-
-            bars = forward_fill(bars, list(fields), ["symbol"], ["trade_date"])
-        w = Window.partitionBy("symbol").orderBy(F.col("trade_date").desc())
-        bars = (
-            bars.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= count)
-            .drop("__rn")
-        )
-        pdf = (
-            bars.select("symbol", "trade_date", *fields)
-            .orderBy("trade_date", "symbol")
-            .toPandas()
-        )
-        if is_dict:
-            return {
-                s: pdf[pdf.symbol == s].set_index("trade_date")[fields]
-                for s in securities
-            }
-        return self._shape(pdf, securities, fields)
-
-    def _point_frame(self, symbol: str, fq) -> pd.DataFrame:
-        """One symbol's FULL daily history via the normal Spark path
-        (adjusted-cache / fq join included), pulled once and kept sorted by
-        trade_date with a string date column for slicing."""
-        key = (symbol, fq or "none")
-        pdf = self._sym_bars.get(key)
-        if pdf is None:
-            pdf = (
-                self._bars([symbol], fq, None, None)
-                .select("symbol", "trade_date", *BAR_FIELDS)
-                .orderBy("trade_date")
-                .toPandas()
-            )
-            pdf["__d"] = pdf["trade_date"].astype(str).str[:10]
-            self._sym_bars[key] = pdf
-        return pdf
-
-    def _point_get_price(
-        self,
-        securities: list[str],
-        fq,
-        start: str | None,
-        end: str | None,
-        fields: list[str],
-        count: int | None,
-    ):
-        """Pandas slice of the per-symbol cache, reproducing get_price's
-        daily range/count semantics exactly (count = bars strictly BEFORE
-        end, spec :1977)."""
-        frames = [self._point_frame(sym, fq) for sym in securities]
-        out = self._point_slice(
-            frames, fields, start, end, count, end_inclusive=False
-        )
-        return self._shape(out, securities, fields)
 
     def _densify_minute(self, mb, securities, minutes: int):
         """Full (symbol x trading-day x session-bucket) grid over the data's
         date span, left-joined with the real bars; gaps carry the previous
-        close. All three grid dimensions are bounded (client edge)."""
-        from simtradedata_spark.operators.resample import _session_minute_to_hhmm
-
+        close (OHLC = carried close, volume/money/n_ticks = 0, vwap null —
+        the daily generator's suspended-bar convention). Bars before a
+        symbol's first trade stay null. All three grid dimensions are
+        bounded (client edge)."""
         b = mb.agg(
             F.min("trade_date").alias("lo"), F.max("trade_date").alias("hi")
         ).first()
@@ -592,91 +370,104 @@ class PTradeDataAPI:
         )
         return mb
 
-    def _point_minute_frame(self, symbol: str, fq, minutes: int) -> pd.DataFrame:
-        """One symbol's FULL minute-bar history via the normal Spark path
-        (materialized 1m table + fold + fq adjustment), pulled once and
-        sliced in pandas afterwards — the minute-frequency twin of
-        ``_point_frame`` for the backtest event loop."""
-        key = (symbol, fq or "none", minutes)
-        pdf = self._sym_minute.get(key)
+    def _series(
+        self, securities, fq, freq, fields, start=None, end=None,
+        inclusive=True, fill="nan",
+    ) -> DataFrame:
+        """The one bar frame: ``(symbol, trade_date, *fields)`` for
+        ``freq = (resample, minutes)``, dates within [start, end] (end
+        strict unless ``inclusive``). The end bound applies to the bar
+        DATE before any resample or timestamp step, so resampled periods
+        aggregate exactly the admitted days and a minute bound admits or
+        drops whole sessions. ``fill='pre'`` densifies minute bars onto
+        the session grid, or forward-fills daily/resampled fields (W2)."""
+        resample, minutes = freq
+        if minutes:
+            df = self._minute_bars(securities, fq, start, end, minutes)
+            if fill == "pre":
+                df = self._densify_minute(df, securities, minutes)
+        else:
+            df = self._bars(securities, fq, start, end)
+        if end and not inclusive:
+            df = df.filter(F.col("trade_date") < end)
+        if resample:
+            df = resample_ohlc(df, resample).withColumnRenamed(
+                "period_start", "trade_date"
+            )
+        if fill == "pre" and not minutes:
+            df = forward_fill(df, list(fields), ["symbol"], ["trade_date"])
+        ts = _minute_ts().alias("trade_date") if minutes else "trade_date"
+        return df.select("symbol", ts, *fields)
+
+    def _point(self, symbol: str, fq, minutes) -> pd.DataFrame:
+        """One symbol's full ``_series`` at native frequency, pulled once
+        and kept sorted, with a ``__d`` date-string column for slicing."""
+        key = (symbol, fq, minutes)
+        pdf = self._points.get(key)
         if pdf is None:
+            fields = MINUTE_FIELDS if minutes else BAR_FIELDS
             pdf = (
-                self._minute_bars([symbol], fq, None, None, minutes)
-                .select("symbol", _minute_ts().alias("trade_date"), *MINUTE_FIELDS)
+                self._series([symbol], fq, (None, minutes), fields)
                 .orderBy("trade_date")
                 .toPandas()
             )
             pdf["__d"] = pdf["trade_date"].astype(str).str[:10]
-            self._sym_minute[key] = pdf
+            self._points[key] = pdf
         return pdf
 
-    def _point_history(
-        self, securities, fields, count, fq, cur, include, is_dict, frame_fn
-    ):
-        """get_history served from a per-symbol point cache (daily or
-        minute ``frame_fn``): pandas slice reproducing the Spark path's
-        strictly-before-current_date (or inclusive) count semantics."""
-        frames = [frame_fn(sym) for sym in securities]
-        out = self._point_slice(
-            frames, fields, None, cur, count, end_inclusive=include
-        )
-        if is_dict:
-            return {
-                s: out[out.symbol == s].set_index("trade_date")[fields]
-                for s in securities
-            }
-        return self._shape(out, securities, fields)
-
-    @staticmethod
-    def _minute_pdf(mb: DataFrame, fields, count) -> pd.DataFrame:
-        """Shared minute-mode tail: optional last-N-per-symbol trim, then
-        the timestamp-indexed pandas frame (used by get_price minute and
-        get_history minute)."""
-        if count is not None:
-            w = Window.partitionBy("symbol").orderBy(
-                F.col("trade_date").desc(), F.col("bar_time").desc()
-            )
-            mb = (
-                mb.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") <= count)
-                .drop("__rn")
-            )
-        return (
-            mb.select("symbol", _minute_ts().alias("trade_date"), *fields)
-            .orderBy("trade_date", "symbol")
-            .toPandas()
-        )
-
-    @staticmethod
-    def _point_slice(
-        frames, fields, start, end, count, end_inclusive: bool
+    def _query(
+        self, securities, fq, freq, fields, start, end, inclusive, count,
+        fill="nan",
     ) -> pd.DataFrame:
-        """Shared pandas range/count slicing for the point caches. Daily
-        count mode excludes end_date (spec :1977 exclusive-of-today);
-        minute count mode includes it (completed minutes are final) —
-        ``end_inclusive`` is that one semantic difference."""
-        parts = []
-        for pdf in frames:
-            if count is not None:
-                if end:
-                    keep = pdf["__d"] <= end if end_inclusive else pdf["__d"] < end
-                    pdf = pdf[keep]
-                pdf = pdf.tail(count)
-            else:
+        """Bars as a pandas frame ``(symbol, trade_date, *fields)`` sorted
+        by (trade_date, symbol): the last ``count`` per symbol, or all of
+        the range when ``count`` is None. Served from the point cache when
+        it holds the answer (native frequency, no fill, cached fields),
+        else by ``_series`` on Spark; both give the same frame."""
+        if count is not None and (
+            isinstance(count, bool)
+            or not isinstance(count, numbers.Integral)
+            or count <= 0
+        ):
+            raise ValueError(f"count={count!r} must be a positive integer")
+        resample, minutes = freq
+        cached = MINUTE_FIELDS if minutes else BAR_FIELDS
+        if (
+            self._point_cache
+            and securities
+            and resample is None
+            and fill != "pre"
+            and set(fields) <= set(cached)
+        ):
+            parts = []
+            for sym in securities:
+                pdf = self._point(sym, fq, minutes)
                 if start:
                     pdf = pdf[pdf["__d"] >= start]
                 if end:
-                    pdf = pdf[pdf["__d"] <= end]
-            parts.append(pdf)
-        return (
-            pd.concat(parts, ignore_index=True)
-            .sort_values(["trade_date", "symbol"], kind="mergesort")
-            .reset_index(drop=True)[["symbol", "trade_date", *fields]]
-        )
+                    pdf = pdf[pdf["__d"] <= end if inclusive else pdf["__d"] < end]
+                parts.append(pdf if count is None else pdf.tail(count))
+            return (
+                pd.concat(parts, ignore_index=True)
+                .sort_values(["trade_date", "symbol"], kind="mergesort")
+                .reset_index(drop=True)[["symbol", "trade_date", *fields]]
+            )
+        df = self._series(securities, fq, freq, fields, start, end, inclusive, fill)
+        if count is not None:
+            df = trailing_n(df, int(count), ["symbol"], [F.col("trade_date")])
+        return df.orderBy("trade_date", "symbol").toPandas()
 
     @staticmethod
-    def _shape(pdf: pd.DataFrame, securities: list[str], fields: list[str]):
-        """W5 pivots: the three PTrade return shapes."""
+    def _shape(
+        pdf: pd.DataFrame, securities: list[str], fields: list[str], is_dict=False
+    ):
+        """W5 pivots: the three PTrade return shapes, or get_history's
+        ``is_dict`` form {symbol → date-indexed frame}."""
+        if is_dict:
+            return {
+                s: pdf[pdf.symbol == s].set_index("trade_date")[fields]
+                for s in securities
+            }
         if len(securities) == 1:
             return pdf.set_index("trade_date")[fields]
         if len(fields) == 1:
@@ -685,6 +476,68 @@ class PTradeDataAPI:
             f: pdf.pivot(index="trade_date", columns="symbol", values=f)
             for f in fields
         }
+
+    def get_price(
+        self,
+        security,
+        start_date=None,
+        end_date=None,
+        frequency="1d",
+        fields=None,
+        fq=None,
+        count=None,
+    ):
+        """``ptrade_data_api.py:33-106`` / spec ``:1957-2108``.
+
+        count mode returns the ``count`` bars strictly BEFORE ``end_date``
+        (exclusive-of-today rule, spec ``:1977``); range mode is inclusive.
+
+        Minute frequencies (spec ``:521-694``): range mode is
+        date-inclusive and ``count`` mode returns the last ``count`` bars
+        ON OR BEFORE ``end_date`` — the end date's own session included;
+        the index is the bar timestamp (trade_date + bar start time).
+
+        Beyond the reference (which warns and falls back to daily,
+        ``ptrade_data_api.py:58-61``): weekly/monthly/quarterly/yearly bars
+        are synthesized from adjusted daily bars via ``resample_ohlc`` (W4),
+        after the range filter so partially-covered edge periods aggregate
+        exactly the requested days. ``count`` then counts periods.
+        """
+        freq = _parse_freq(frequency, fields)
+        resample, minutes = freq
+        fields = fields or (RESAMPLED_FIELDS if resample else BAR_FIELDS)
+        securities = [security] if isinstance(security, str) else list(security)
+        start = _to_date_str(start_date) if (start_date and count is None) else None
+        end = _to_date_str(end_date) if end_date else None
+        inclusive = count is None or minutes is not None
+        pdf = self._query(securities, fq, freq, fields, start, end, inclusive, count)
+        return self._shape(pdf, securities, fields)
+
+    def get_history(
+        self,
+        count,
+        frequency="1d",
+        field="close",
+        security_list=None,
+        fq=None,
+        include=False,
+        fill="nan",
+        is_dict=False,
+        current_date=None,
+    ):
+        """Spec ``:1774-1955``: last ``count`` bars before ``current_date``
+        (inclusive when ``include``), at any frequency; minute bars carry
+        the get_price minute timestamp index. ``fill='pre'`` forward-fills
+        suspension gaps (W2); at minute frequency it densifies to the full
+        session grid over trading days first."""
+        securities = (
+            [security_list] if isinstance(security_list, str) else list(security_list)
+        )
+        fields = [field] if isinstance(field, str) else list(field)
+        freq = _parse_freq(frequency, fields)
+        cur = _to_date_str(current_date) if current_date else None
+        pdf = self._query(securities, fq, freq, fields, None, cur, include, count, fill)
+        return self._shape(pdf, securities, fields, is_dict)
 
     # -- universe / metadata ----------------------------------------------
 
@@ -1276,8 +1129,7 @@ class PTradeDataAPI:
         if query_date:
             st = st.filter(F.col("trade_date") == _to_date_str(query_date))
         else:
-            w = Window.partitionBy("symbol").orderBy(F.col("trade_date").desc())
-            st = st.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1")
+            st = trailing_n(st, 1, ["symbol"], [F.col("trade_date")])
         col = "is_st" if query_type == "ST" else "is_halt"
         rows = st.select("symbol", col).collect()
         found = {r["symbol"]: bool(r[col]) for r in rows}
@@ -1325,10 +1177,7 @@ class PTradeDataAPI:
         if merge_type == "first":
             f = f.filter(F.col("merge_seq") == 0)
         else:
-            w = Window.partitionBy("symbol", "end_date").orderBy(
-                F.col("merge_seq").desc()
-            )
-            f = f.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
+            f = trailing_n(f, 1, ["symbol", "end_date"], [F.col("merge_seq")])
 
         if date is not None:
             d = _to_date_str(date)
@@ -1357,8 +1206,7 @@ class PTradeDataAPI:
         v = self._table("valuation").filter(F.col("symbol").isin(stocks))
         if date is not None:
             v = v.filter(F.col("trade_date") <= _to_date_str(date))
-        w = Window.partitionBy("symbol").orderBy(F.col("trade_date").desc())
-        v = v.withColumn("__rn", F.row_number().over(w)).filter("__rn = 1").drop("__rn")
+        v = trailing_n(v, 1, ["symbol"], [F.col("trade_date")])
         pdf = v.toPandas()
         if fields:
             keep = ["symbol", "trade_date"] + [c for c in fields if c in pdf.columns]
@@ -1394,34 +1242,21 @@ class PTradeDataAPI:
         indicators then run over post-adjusted minute bars with a
         timestamp index — the same EMA recursions, one Arrow batch per
         symbol either way."""
+        resample, minutes = _parse_freq(frequency)
+        if resample:
+            raise ValueError(
+                f"frequency={frequency!r} not supported for indicators"
+            )
         securities = [security] if isinstance(security, str) else list(security)
         # only the END bound is safe to push to the scan: EMA state at
         # start_date depends on all earlier bars (warmup), later ones never
         end = _to_date_str(end_date) if end_date else None
-        freq = _FREQUENCIES.get(frequency, KeyError)
-        if freq is KeyError or (freq is not None and not isinstance(freq, tuple)):
-            raise ValueError(
-                f"frequency={frequency!r} not supported for indicators"
-            )
-        if isinstance(freq, tuple):
-            mb = self._minute_bars(securities, "post", None, end, freq[1])
-            bars = mb.select(
-                "symbol", _minute_ts().alias("trade_date"), "high", "low", "close"
-            )
-            ind = compute_indicators(bars, ts_type="timestamp")
-            if start_date:
-                ind = ind.filter(
-                    F.to_date("trade_date") >= _to_date_str(start_date)
-                )
-            if end_date:
-                ind = ind.filter(F.to_date("trade_date") <= end)
-            return ind.orderBy("symbol", "trade_date").toPandas()
-        bars = self._bars(securities, fq="post", end=end)
-        ind = compute_indicators(bars)
+        bars = self._series(
+            securities, "post", (None, minutes), ["high", "low", "close"], None, end
+        )
+        ind = compute_indicators(bars, ts_type="timestamp" if minutes else "date")
         if start_date:
-            ind = ind.filter(F.col("trade_date") >= _to_date_str(start_date))
-        if end_date:
-            ind = ind.filter(F.col("trade_date") <= F.lit(end))
+            ind = ind.filter(F.to_date("trade_date") >= _to_date_str(start_date))
         return ind.orderBy("symbol", "trade_date").toPandas()
 
     def get_MACD(self, security, **kw) -> pd.DataFrame:

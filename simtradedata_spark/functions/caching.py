@@ -9,8 +9,9 @@ its tail queries by seconds once storage memory filled.
 
 ``release_scratch`` frees every persistent RDD that is NOT registered as a
 session-lifetime cache. Long-lived caches (the memoized synthetic-market
-bars, the PTrade client's pinned tables) call ``protect_current`` right
-after materializing, which snapshots their RDD ids; everything else is, by
+bars, the PTrade client's pinned tables) take a ``snapshot`` before
+persisting and call ``protect_new`` right after materializing, which
+registers exactly the RDD ids they added; everything else is, by
 definition, scratch. Harness/bench code calls ``release_scratch`` between
 queries; library callers may call it after a batch job.
 
@@ -99,13 +100,6 @@ def protect_new(spark: SparkSession, before: set[int]) -> None:
     form protects exactly the memo being built, never scratch that happens
     to be alive at the same moment."""
     _PROTECTED.update(snapshot(spark) - before)
-
-
-def protect_current(spark: SparkSession) -> None:
-    """Mark every currently-persistent RDD as session-lifetime (called by
-    memo creators immediately after materializing their cache)."""
-    m = _jmap(spark)
-    _PROTECTED.update(int(k) for k in m.keySet().toArray())
 
 
 def release_scratch(spark: SparkSession) -> int:

@@ -551,46 +551,6 @@ def test_ticks_respect_bar_envelope(api, market):
     assert susp == {} or "000003.SZ" not in susp
 
 
-def test_point_cache_parity_and_no_spark_after_warm(api, warehouse):
-    """point_cache=True serves get_price point queries from the per-symbol
-    pandas cache: results identical to the Spark path (range, count, fq,
-    multi-security shapes), and after warm-up the cache path never touches
-    Spark again (proven by breaking _bars)."""
-    import pandas as pd
-
-    from simtradedata_spark.api.ptrade import PTradeDataAPI
-
-    pc = PTradeDataAPI(warehouse, point_cache=True)
-    sym, sym2 = "600000.SS", "600001.SS"
-    cases = [
-        dict(security=sym, start_date="2022-03-01", end_date="2022-03-31"),
-        dict(security=sym, end_date="2022-06-30", count=10),
-        dict(security=sym, start_date="2022-03-01", end_date="2022-03-31", fq="post"),
-        dict(security=[sym, sym2], start_date="2022-03-01", end_date="2022-03-15",
-             fields=["close"]),
-    ]
-    for kw in cases:
-        a = api.get_price(**kw)
-        b = pc.get_price(**kw)
-        pd.testing.assert_frame_equal(
-            a if isinstance(a, pd.DataFrame) else a["close"],
-            b if isinstance(b, pd.DataFrame) else b["close"],
-        )
-
-    # warm for both fq variants used above, then sever the Spark path
-    pc._bars = None  # any further Spark access would raise TypeError
-    got = pc.get_price(sym, start_date="2022-05-01", end_date="2022-05-31")
-    want = api.get_price(sym, start_date="2022-05-01", end_date="2022-05-31")
-    pd.testing.assert_frame_equal(got, want)
-    # resampled/minute frequencies and non-bar fields still go to Spark:
-    # the cache must NOT have hijacked them
-    import pytest as _pytest
-
-    with _pytest.raises(TypeError):
-        pc.get_price(sym, start_date="2022-05-01", end_date="2022-05-31",
-                     frequency="1w")
-
-
 # -- minute frequency (spec :521-694 minute mode) --------------------------
 
 
@@ -680,25 +640,6 @@ def test_get_price_minute_bad_inputs(api):
         api.get_price("600000.SS", "2022-03-01", "2022-03-02", frequency="7s")
 
 
-def test_point_cache_minute_parity(warehouse):
-    """The minute point-cache client returns byte-identical frames to the
-    Spark minute path, then serves repeat queries from pandas."""
-    from simtradedata_spark.api.ptrade import PTradeDataAPI
-
-    slow = PTradeDataAPI(warehouse)
-    fast = PTradeDataAPI(warehouse, point_cache=True)
-    for kwargs in (
-        dict(start_date="2022-03-01", end_date="2022-03-02", frequency="1m"),
-        dict(end_date="2022-03-02", count=50, frequency="1m"),
-        dict(start_date="2022-03-01", end_date="2022-03-03",
-             frequency="30m", fq="post", fields=["close", "vwap"]),
-    ):
-        a = slow.get_price("600000.SS", **kwargs)
-        b = fast.get_price("600000.SS", **kwargs)
-        pd.testing.assert_frame_equal(a, b)
-    assert ("600000.SS", "none", 1) in fast._sym_minute
-
-
 def test_get_history_weekly_resample(api):
     """get_history now honors resample frequencies (previously silently
     daily): last 4 weekly bars before current_date, OHLC folded per week."""
@@ -738,36 +679,178 @@ def test_get_history_minute_fill_pre_suspension(api, market):
     assert (bare.index.strftime("%Y-%m-%d") == susp_day).sum() == 0
 
 
-def test_point_cache_get_history_parity(warehouse):
-    """get_history from a point_cache client is byte-identical to the
-    Spark path at daily AND minute frequency (range of count/include/
-    is_dict/fq shapes)."""
+# -- point cache (point_cache=True) = the Spark path --------------------------
+
+_SYM = "600000.SS"
+_WHEN = _dt.datetime(2022, 3, 15, 9, 30)  # a backtest clock: blotter.current_dt
+
+# (method, kwargs): daily and minute frequency, range and count mode, fq
+# none/pre/post, include, single/multi/is_dict shapes, datetime and
+# Timestamp dates, count <= 0 (ValueError on both paths), empty lists
+POINT_CACHE_CASES = {
+    "price-range": ("get_price", dict(
+        security=_SYM, start_date="2022-03-01", end_date="2022-03-31")),
+    "price-count": ("get_price", dict(security=_SYM, end_date="2022-06-30", count=10)),
+    "price-range-post": ("get_price", dict(
+        security=_SYM, start_date="2022-03-01", end_date="2022-03-31", fq="post")),
+    "price-multi-one-field": ("get_price", dict(
+        security=[_SYM, "600001.SS"], start_date="2022-03-01",
+        end_date="2022-03-15", fields=["close"])),
+    "price-multi-count-pre": ("get_price", dict(
+        security=[_SYM, "000001.SZ"], end_date="2022-06-15", count=3, fq="pre")),
+    "price-datetime-end": ("get_price", dict(security=_SYM, end_date=_WHEN, count=2)),
+    "price-timestamp-end": ("get_price", dict(
+        security=_SYM, end_date=pd.Timestamp(_WHEN), count=2)),
+    "price-empty": ("get_price", dict(security=[], end_date="2022-03-15", count=1)),
+    "price-count-negative": ("get_price", dict(
+        security=_SYM, end_date="2022-03-15", count=-2)),
+    "price-1m-range": ("get_price", dict(
+        security=_SYM, start_date="2022-03-01", end_date="2022-03-02", frequency="1m")),
+    "price-1m-count": ("get_price", dict(
+        security=_SYM, end_date="2022-03-02", count=50, frequency="1m")),
+    "price-30m-range-post": ("get_price", dict(
+        security=_SYM, start_date="2022-03-01", end_date="2022-03-03",
+        frequency="30m", fq="post", fields=["close", "vwap"])),
+    "price-5m-multi-datetime": ("get_price", dict(
+        security=[_SYM, "000001.SZ"], end_date=_WHEN, count=6, frequency="5m",
+        fields=["close"])),
+    "history-count": ("get_history", dict(
+        count=10, field="close", security_list=_SYM, current_date="2022-06-15")),
+    "history-multi-include-post": ("get_history", dict(
+        count=7, field=["close", "volume"], security_list=[_SYM, "000001.SZ"],
+        current_date="2022-06-15", include=True, fq="post")),
+    "history-dict": ("get_history", dict(
+        count=5, field="close", security_list=[_SYM], current_date="2022-06-15",
+        is_dict=True)),
+    "history-dict-multi-pre": ("get_history", dict(
+        count=10, field="close", security_list=[_SYM, "000001.SZ"],
+        current_date="2022-06-15", is_dict=True, fq="pre")),
+    "history-timestamp": ("get_history", dict(
+        count=3, field="close", security_list=_SYM, current_date=pd.Timestamp(_WHEN))),
+    "history-datetime-include": ("get_history", dict(
+        count=3, field="close", security_list=_SYM, current_date=_WHEN, include=True)),
+    "history-empty": ("get_history", dict(
+        count=5, security_list=[], current_date="2022-06-15")),
+    "history-empty-dict": ("get_history", dict(
+        count=5, security_list=[], current_date="2022-06-15", is_dict=True)),
+    "history-count-zero": ("get_history", dict(
+        count=0, security_list=_SYM, current_date="2022-06-15")),
+    "history-1m-count": ("get_history", dict(
+        count=25, frequency="1m", field="close", security_list=_SYM,
+        current_date="2022-06-15")),
+    "history-30m-include": ("get_history", dict(
+        count=9, frequency="30m", field=["close", "vwap"], security_list="000001.SZ",
+        current_date="2022-06-15", include=True)),
+    "history-1m-dict-datetime": ("get_history", dict(
+        count=30, frequency="1m", field=["close", "volume"],
+        security_list=[_SYM, "000001.SZ"], current_date=_WHEN, is_dict=True)),
+    "history-1m-count-negative": ("get_history", dict(
+        count=-1, frequency="1m", security_list=_SYM, current_date="2022-03-02")),
+}
+
+
+@pytest.fixture(scope="module")
+def point_api(warehouse):
     from simtradedata_spark.api.ptrade import PTradeDataAPI
 
-    slow = PTradeDataAPI(warehouse)
-    fast = PTradeDataAPI(warehouse, point_cache=True)
-    cases = [
-        dict(count=10, field="close", security_list="600000.SS",
-             current_date="2022-06-15"),
-        dict(count=7, field=["close", "volume"],
-             security_list=["600000.SS", "000001.SZ"],
-             current_date="2022-06-15", include=True, fq="post"),
-        dict(count=25, frequency="1m", field="close",
-             security_list="600000.SS", current_date="2022-06-15"),
-        dict(count=9, frequency="30m", field=["close", "vwap"],
-             security_list="000001.SZ", current_date="2022-06-15",
-             include=True),
+    return PTradeDataAPI(warehouse, point_cache=True)
+
+
+def _answer(api, method, kw):
+    try:
+        return getattr(api, method)(**kw)
+    except ValueError as e:
+        return e
+
+
+def _assert_same(want, got):
+    if isinstance(want, ValueError):
+        assert isinstance(got, ValueError) and str(got) == str(want)
+    elif isinstance(want, dict):
+        assert isinstance(got, dict) and want.keys() == got.keys()
+        for k in want:
+            pd.testing.assert_frame_equal(want[k], got[k])
+    else:
+        pd.testing.assert_frame_equal(want, got)
+
+
+@pytest.mark.parametrize(
+    "method,kw", list(POINT_CACHE_CASES.values()), ids=list(POINT_CACHE_CASES)
+)
+def test_point_cache_parity(api, point_api, method, kw):
+    """point_cache=True returns exactly what the Spark path returns —
+    frames, shapes, and the ValueError for a count that is not positive."""
+    want = _answer(api, method, kw)
+    _assert_same(want, _answer(point_api, method, kw))
+    if kw.get("count", 1) <= 0:
+        assert isinstance(want, ValueError)
+
+
+def test_datetime_dates_admit_no_current_day_bar(api, point_api):
+    """A datetime / Timestamp end date is that DATE: exclusive-of-today
+    reads never return the bar of the day the clock is in."""
+    for client in (api, point_api):
+        for when in (_WHEN, pd.Timestamp(_WHEN)):
+            px = client.get_price(_SYM, end_date=when, count=2)
+            assert [str(d) for d in px.index] == ["2022-03-11", "2022-03-14"]
+            h = client.get_history(1, security_list=_SYM, current_date=when)
+            assert str(h.index[-1]) == "2022-03-14"
+
+
+def test_point_cache_no_spark_after_warm(api, warehouse):
+    """After one pull per (symbol, fq, minutes), daily and minute reads are
+    served without Spark (proven by severing the frame builder); resampled
+    frequencies still go to Spark."""
+    from simtradedata_spark.api.ptrade import PTradeDataAPI
+
+    pc = PTradeDataAPI(warehouse, point_cache=True)
+    reads = [
+        ("get_price", dict(security=_SYM, start_date="2022-03-01", end_date="2022-03-31")),
+        ("get_history", dict(count=5, security_list=[_SYM], current_date="2022-06-15",
+                             fq="pre", is_dict=True)),
+        ("get_price", dict(security=_SYM, end_date="2022-03-02", count=50, frequency="1m")),
+        ("get_history", dict(count=9, frequency="30m", field=["close", "vwap"],
+                             security_list=_SYM, current_date="2022-06-15")),
     ]
-    for kw in cases:
-        a, b = slow.get_history(**kw), fast.get_history(**kw)
-        if isinstance(a, dict):
-            assert a.keys() == b.keys()
-            for k in a:
-                pd.testing.assert_frame_equal(a[k], b[k])
-        else:
-            pd.testing.assert_frame_equal(a, b)
-    d1 = slow.get_history(5, field="close", security_list=["600000.SS"],
-                          current_date="2022-06-15", is_dict=True)
-    d2 = fast.get_history(5, field="close", security_list=["600000.SS"],
-                          current_date="2022-06-15", is_dict=True)
-    pd.testing.assert_frame_equal(d1["600000.SS"], d2["600000.SS"])
+    for method, kw in reads:
+        getattr(pc, method)(**kw)
+    pc._series = None  # any further Spark bar read raises TypeError
+    later = [
+        ("get_price", dict(security=_SYM, start_date="2022-05-01", end_date="2022-05-31")),
+        ("get_history", dict(count=8, security_list=[_SYM], current_date="2022-04-20",
+                             fq="pre", is_dict=True)),
+        ("get_price", dict(security=_SYM, end_date="2022-04-06", count=90, frequency="1m")),
+        ("get_history", dict(count=4, frequency="30m", field=["close", "vwap"],
+                             security_list=_SYM, current_date="2022-05-10", include=True)),
+    ]
+    for method, kw in later:
+        _assert_same(getattr(api, method)(**kw), getattr(pc, method)(**kw))
+    with pytest.raises(TypeError):
+        pc.get_price(_SYM, "2022-05-01", "2022-05-31", frequency="1w")
+
+
+def test_one_bar_path_guard():
+    """api/ptrade.py keeps one frequency parse, and leaves every last-N /
+    latest-row trim to windows.trailing_n: row_number() is called only by
+    the tick pager ``_tick_slice``."""
+    import ast
+    from pathlib import Path
+
+    from simtradedata_spark.api import ptrade
+
+    src = Path(ptrade.__file__).read_text()
+    assert src.count("_FREQUENCIES.get(") <= 1
+
+    def row_number_calls(node) -> int:
+        return sum(
+            isinstance(n, ast.Call)
+            and getattr(n.func, "attr", getattr(n.func, "id", None)) == "row_number"
+            for n in ast.walk(node)
+        )
+
+    tree = ast.parse(src)
+    pager = next(
+        n for n in ast.walk(tree)
+        if isinstance(n, ast.FunctionDef) and n.name == "_tick_slice"
+    )
+    assert row_number_calls(tree) == row_number_calls(pager)
