@@ -13,11 +13,16 @@ driver-side build cost changes.
 Exactness: doubles are rendered with ``repr``, Python's shortest
 round-trip decimal form; Java's ``Double.parseDouble`` (what the SQL
 parser uses) maps that string back to the identical IEEE double, so the
-literal is bit-exact with what ``F.lit`` would have produced."""
+literal is bit-exact with what ``F.lit`` would have produced. ``Decimal``
+values render as exact ``BD`` literals.
+
+``ident`` quotes a column name for SQL text, so a name that needs
+backticks (spaces, keywords, punctuation) cannot break the parse."""
 
 from __future__ import annotations
 
 import math
+from decimal import Decimal
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -36,6 +41,10 @@ def _render(v) -> str:
         if not math.isfinite(v):
             raise ValueError(f"fast_lit: non-finite double {v!r}")
         return repr(v) + "D"
+    if isinstance(v, Decimal):
+        if not v.is_finite():
+            raise ValueError(f"fast_lit: non-finite decimal {v!r}")
+        return format(v, "f") + "BD"
     if isinstance(v, int):
         # BIGINT unconditionally: a mixed int32/int64 array would make the
         # element type depend on the VALUES; callers cast where narrower
@@ -44,6 +53,11 @@ def _render(v) -> str:
     if isinstance(v, str):
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     raise TypeError(f"fast_lit: unsupported element type {type(v).__name__}")
+
+
+def ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def fast_lit(values) -> Column:

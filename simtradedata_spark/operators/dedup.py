@@ -351,8 +351,8 @@ def minhash_lsh_candidates(
         df, id_col, text_col, num_hashes, shingle_n, seed, hash_fn=hash_fn
     ).filter(F.col("minhash").isNotNull())
     # Big-input sessions (input bytes past session.BIG_INPUT_BYTES — the
-    # data-derived signal get_spark measures at build time; conf-provenance
-    # fallback for sessions without it, see session.big_input_session) get
+    # data-derived signal get_spark measures at build time; a session
+    # without it counts as small, see session.big_input_session) get
     # the checkpoint + GC nudge, so the ContextCleaner deletes the ~10 GB
     # shingle-explode shuffle BEFORE the band self-join runs. Small
     # sessions keep the lazy persist: the eager checkpoint job plus a

@@ -32,7 +32,7 @@ def global_cumsum(
     from pyspark import StorageLevel
 
     from simtradedata_spark.functions.caching import scratch_persist
-    from simtradedata_spark.functions.lits import fast_lit
+    from simtradedata_spark.functions.lits import fast_lit, ident
 
     # SCRATCH persist: the split-point sample, the per-bucket totals and
     # the final cumsum consumer are THREE actions over `df` — unpersisted,
@@ -64,7 +64,7 @@ def global_cumsum(
     n_bkts = len(bounds) + 1
     tot_row = bucketed.selectExpr(
         *[
-            f"SUM(CASE WHEN _bkt = {b} THEN {value_col} END) AS t{b}"
+            f"SUM(CASE WHEN _bkt = {b} THEN {ident(value_col)} END) AS t{b}"
             for b in range(n_bkts)
         ]
     ).collect()[0]

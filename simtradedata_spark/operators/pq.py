@@ -12,11 +12,10 @@ pair with the coarse quantizer in similarity.build_ivf_index.
 
 Scale shape: training is driver-side Lloyd per subspace on a bounded
 sample (PQ codebooks, like IVF quantizers, always train on a sample —
-same contract as similarity._train_centroids); encode is a narrow
-column-expression pass (no shuffle, no UDF — the m×k distance evaluations
-are unrolled into codegen'd array expressions); ADC search broadcasts the
-query set and ranks with one window, the cosine_top_k plan shape on
-8-byte rows instead of 512-byte vectors.
+the same ``similarity._lloyd`` loop the IVF quantizer runs); encode is a
+narrow column-expression pass (no shuffle, no UDF); ADC search broadcasts
+the query set and ranks with the shared ``similarity._rank_top_k`` window,
+the cosine_top_k plan shape on 8-byte rows instead of 512-byte vectors.
 
 Metric: squared L2, PQ's native metric. On unit-normalized inputs L2
 ranking equals cosine ranking (||a-b||² = 2-2cosθ), which is how the
@@ -31,9 +30,18 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from simtradedata_spark.functions.lits import fast_lit
+from simtradedata_spark.operators.similarity import (
+    _candidates,
+    _corpus,
+    _lloyd,
+    _probes_frame,
+    _quantizer,
+    _queries,
+    _rank_top_k,
+    _scored,
+)
 
 
 def pq_train(
@@ -67,22 +75,10 @@ def pq_train(
         raise ValueError(f"dim {d} not divisible by m={m}")
     sub = d // m
     rng = np.random.default_rng(seed)
-    books = []
-    for j in range(m):
-        s = mat[:, j * sub : (j + 1) * sub]
-        k_eff = min(k, len(s))
-        cent = s[rng.choice(len(s), size=k_eff, replace=False)]
-        for _ in range(max_iter):
-            assign = np.argmin(
-                -2.0 * (s @ cent.T) + (cent * cent).sum(axis=1), axis=1
-            )
-            for c in range(k_eff):
-                members = s[assign == c]
-                cent[c] = members.mean(axis=0) if len(members) else s[
-                    rng.integers(len(s))
-                ]
-        books.append([[float(x) for x in row] for row in cent])
-    return books
+    return [
+        _lloyd(mat[:, j * sub : (j + 1) * sub], k, rng, max_iter).tolist()
+        for j in range(m)
+    ]
 
 
 def pq_encode(
@@ -227,21 +223,22 @@ def pq_adc_top_k(
         F.col(qid_col).alias("query_id"),
         _adc_lut(qvec_col, codebooks).alias("__lut"),
     )
-    scored = c.join(
-        F.broadcast(q), F.col("neighbor_id") != F.col("query_id")
-    ).select(
+    scored = _candidates(c, q).select(
         "query_id",
         "neighbor_id",
         _adc_dist_lut("__codes", "__lut", len(codebooks)).alias("adc_dist2"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_dist2").asc(), F.col("neighbor_id")
+    return _rank_top_k(
+        scored, k, score="adc_dist2", ascending=True, keep=("adc_dist2",)
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "adc_dist2")
-    )
+
+
+def _rerank(cand, corpus, id_col, vec_col, queries, qid_col, qvec_col, k):
+    """Exact-cosine top-k over a (query_id, neighbor_id, ...) shortlist:
+    only the listed corpus rows' vectors are fetched and scored."""
+    withv = cand.join(_corpus(corpus, id_col, vec_col), "neighbor_id")
+    q = _queries(queries, qid_col, qvec_col)
+    return _rank_top_k(_scored(withv.join(F.broadcast(q), "query_id")), k)
 
 
 def pq_shortlist_rerank(
@@ -264,33 +261,10 @@ def pq_shortlist_rerank(
     becomes 0.86 through a 100-candidate re-rank (tests/test_pq.py pins
     the floor). The exact pass touches shortlist×|queries| vectors instead
     of the corpus."""
-    from simtradedata_spark.operators.similarity import cosine
-
     cand = pq_adc_top_k(
         codes_df, id_col, queries, qid_col, qvec_col, codebooks, k=shortlist
-    ).select("query_id", "neighbor_id")
-    withv = cand.join(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nvec")
-        ),
-        "neighbor_id",
     )
-    q = queries.select(
-        F.col(qid_col).alias("query_id"), F.col(qvec_col).alias("__qvec")
-    )
-    scored = withv.join(F.broadcast(q), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        cosine(F.col("__qvec"), F.col("__nvec")).alias("__sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rerank(cand, corpus, id_col, vec_col, queries, qid_col, qvec_col, k)
 
 
 def ivfpq_top_k(
@@ -308,9 +282,9 @@ def ivfpq_top_k(
     max_iter: int = 5,
 ) -> DataFrame:
     """The full FAISS-style IVF-PQ serving stack, composed from this
-    package's tested pieces: the coarse quantizer
-    (similarity._train_centroids + Arrow-GEMM cell assignment) restricts
-    the scan to the queries' ``n_probe`` nearest cells; PQ codes answer
+    package's tested pieces: the coarse quantizer (similarity._quantizer:
+    sample-trained Lloyd's + Arrow-GEMM cell assignment) restricts the
+    scan to the queries' ``n_probe`` nearest cells; PQ codes answer
     ADC *within* the probed cells; an exact cosine re-rank over the
     per-query ``shortlist`` repairs quantization error. Cost per query:
     ~(n_probe/n_lists) of the corpus touched as 8-byte codes, plus
@@ -322,28 +296,10 @@ def ivfpq_top_k(
     pure candidate pruning, never scoring error.
 
     Output: (query_id, neighbor_id, rank) — the cosine_top_k shape."""
-    from simtradedata_spark.operators.similarity import (
-        _auto_train_cap,
-        _cell_udf,
-        _probes_frame,
-        _resolve_n_lists,
-        _train_centroids,
-        cosine,
-    )
-
-    n_lists = _resolve_n_lists(corpus, n_lists)
-    cent = _train_centroids(
-        corpus, vec_col, n_lists, seed, max_iter,
-        train_cap=_auto_train_cap(n_lists),
-    )
-    _cell = _cell_udf(corpus, cent)
+    cent, cell = _quantizer(corpus, vec_col, n_lists, seed, max_iter)
     books = pq_train(corpus, vec_col, m=m, k=codebook_k, seed=seed)
     c = pq_encode(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("__cvec"),
-            _cell(F.col(vec_col)).alias("__cell"),
-        ),
+        _corpus(corpus, id_col, vec_col, cell(F.col(vec_col)).alias("__cell")),
         "__cvec",
         books,
         out_col="__codes",
@@ -351,45 +307,13 @@ def ivfpq_top_k(
     probes = _probes_frame(
         queries, id_col, vec_col, cent, n_probe, "__cell"
     ).withColumn("__lut", _adc_lut("__qvec", books))
-    cand = (
-        c.join(F.broadcast(probes), ["__cell"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            _adc_dist_lut("__codes", "__lut", m).alias("__adc"),
-        )
-    )
-    w_short = Window.partitionBy("query_id").orderBy(
-        F.col("__adc").asc(), F.col("neighbor_id")
-    )
-    short = (
-        cand.withColumn("__r", F.row_number().over(w_short))
-        .filter(F.col("__r") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
-    withv = short.join(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__nvec")
-        ),
-        "neighbor_id",
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-    )
-    scored = withv.join(F.broadcast(q), "query_id").select(
+    cand = _candidates(c, probes, "__cell").select(
         "query_id",
         "neighbor_id",
-        cosine(F.col("__qvec"), F.col("__nvec")).alias("__sim"),
+        _adc_dist_lut("__codes", "__lut", m).alias("__adc"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    short = _rank_top_k(cand, shortlist, score="__adc", ascending=True)
+    return _rerank(short, corpus, id_col, vec_col, queries, id_col, vec_col, k)
 
 
 def pq_codebooks_from_rows(

@@ -1,16 +1,29 @@
 """Similarity search over embedding columns (LLM-pipeline extension,
 BASELINE.json north star).
 
-  - cosine_top_k: brute-force cosine top-k. The query set is broadcast
-    (it is small by construction); the corpus is never shuffled — each corpus
-    partition scores its rows against every query locally, and the global
-    top-k per query is a TakeOrdered-style aggregation. Dot products use
-    built-in higher-order functions (zip_with + aggregate) in double
-    precision — JVM-side, no Python.
-  - lsh_bucket_top_k: random-hyperplane LSH variant — corpus and queries are
-    bucketed by sign-pattern prefix; only same-bucket candidates are scored.
-    Trades recall for a ~2^bits reduction in scored pairs; the scale path when
-    the corpus no longer fits a per-partition scan per query.
+Every search method here (and in pq.py) is one pipeline: a method-specific
+CANDIDATE step builds (query, neighbor) pairs carrying ``__qvec`` and
+``__cvec``, then shared code scores and ranks them — ``_scored`` adds the
+exact cosine ``__sim`` and ``_rank_top_k`` keeps the top k per query (ties
+broken by neighbor id, so results are deterministic). The candidate steps:
+
+  - cosine_top_k / hard_negative_top_k (``_brute_scored``): every corpus
+    row against the broadcast query set. The query set is small by
+    construction; the corpus is never shuffled — each partition scores
+    its rows against every query locally.
+  - lsh_bucket_top_k: random-hyperplane LSH — only pairs sharing a
+    sign-pattern bucket (plus optional Hamming-1 probes) are scored; a
+    ~2^bits cut in scored pairs for recall < 1.
+  - ivf_top_k / hard_negative_top_k_ivf / ivf_probe_persisted: an IVF
+    coarse quantizer (``_quantizer``: driver-side Lloyd's, ``_lloyd``, on
+    a bounded sample, plus a broadcast-centroid cell UDF) — only pairs in
+    the query's ``n_probe`` nearest cells are scored.
+  - pq.py: ADC over product-quantization codes ranks a shortlist, then
+    the exact cosine re-rank (``pq._rerank``) reuses ``_scored`` and
+    ``_rank_top_k``.
+
+Dot products use built-in higher-order functions (zip_with + aggregate) in
+double precision — JVM-side, no Python.
 """
 
 from __future__ import annotations
@@ -43,6 +56,64 @@ def cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
+def _queries(df: DataFrame, id_col: str, vec_col: str, *extra) -> DataFrame:
+    return df.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec"), *extra
+    )
+
+
+def _corpus(df: DataFrame, id_col: str, vec_col: str, *extra) -> DataFrame:
+    return df.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec"), *extra
+    )
+
+
+def _candidates(c: DataFrame, q: DataFrame, on: str | None = None) -> DataFrame:
+    """Corpus rows × broadcast query rows sharing ``on`` (every pair when
+    None), self-pairs excluded."""
+    if on is None:
+        return c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
+    return c.join(F.broadcast(q), [on]).filter(
+        F.col("neighbor_id") != F.col("query_id")
+    )
+
+
+def _scored(pairs: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, __sim) — exact cosine of each pair."""
+    return pairs.select(
+        "query_id",
+        "neighbor_id",
+        cosine(F.col("__qvec"), F.col("__cvec")).alias("__sim"),
+    )
+
+
+def _rank_top_k(
+    scored: DataFrame,
+    k: int,
+    score: str = "__sim",
+    ascending: bool = False,
+    keep: tuple[str, ...] = (),
+) -> DataFrame:
+    """The k best neighbors per query by ``score`` (ties → lowest neighbor
+    id) as (query_id, neighbor_id, rank, *keep); rank 1 is the best."""
+    order = F.col(score).asc() if ascending else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", *keep)
+    )
+
+
+def _brute_scored(corpus, queries, id_col, vec_col, query_id_col=None):
+    return _scored(
+        _candidates(
+            _corpus(corpus, id_col, vec_col),
+            _queries(queries, query_id_col or id_col, vec_col),
+        )
+    )
+
+
 def cosine_top_k(
     corpus: DataFrame,
     queries: DataFrame,
@@ -56,25 +127,8 @@ def cosine_top_k(
     Returns (query_id, neighbor_id, rank) — rank 1 = nearest; the query row
     itself (same id) is excluded. Ties broken by neighbor id (deterministic).
     """
-    qid = query_id_col or id_col
-    q = queries.select(
-        F.col(qid).alias("query_id"), F.col(vec_col).alias("__qvec")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
-    )
-    scored = c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id")).select(
-        "query_id",
-        "neighbor_id",
-        cosine(F.col("__qvec"), F.col("__cvec")).alias("__sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
+    return _rank_top_k(
+        _brute_scored(corpus, queries, id_col, vec_col, query_id_col), k
     )
 
 
@@ -125,17 +179,9 @@ def lsh_bucket_top_k(
     sign). Cost grows only on the broadcast query side — the corpus is
     never re-bucketed — so recall rises without touching the big relation;
     p = bits probes every Hamming-1 bucket."""
-    planes = _hyperplanes(dim, bits, seed)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        lsh_bucket_key(F.col(vec_col), planes).alias("__bucket"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qvec"),
-        lsh_bucket_key(F.col(vec_col), planes).alias("__bucket"),
-    )
+    key = lsh_bucket_key(F.col(vec_col), _hyperplanes(dim, bits, seed))
+    c = _corpus(corpus, id_col, vec_col, key.alias("__bucket"))
+    q = _queries(queries, id_col, vec_col, key.alias("__bucket"))
     if multi_probe > 0:
         probes = F.array_distinct(
             F.array(
@@ -149,25 +195,11 @@ def lsh_bucket_top_k(
         q = q.select(
             "query_id", "__qvec", F.explode(probes).alias("__bucket")
         )
-    scored = (
-        c.join(F.broadcast(q), ["__bucket"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("__qvec"), F.col("__cvec")).alias("__sim"),
-        )
-        # multi-probe can surface the same pair via several buckets
-        .dropDuplicates(["query_id", "neighbor_id"])
+    # multi-probe can surface the same pair via several buckets
+    scored = _scored(_candidates(c, q, "__bucket")).dropDuplicates(
+        ["query_id", "neighbor_id"]
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _rank_top_k(scored, k)
 
 
 # Auto IVF sizing: hold the EXPECTED CELL SIZE constant as the corpus grows
@@ -175,14 +207,12 @@ def lsh_bucket_top_k(
 # probe's candidate volume stays n_probe x target per query instead of
 # n_probe x N/16 — the pinned-16 default was linear-in-N per query and
 # therefore quadratic once the query batch itself scales with the corpus
-# (hard-negative mining probes anchors ∝ corpus; reference analog: the
-# per-symbol batch loop unified_fetcher.py:152-189 scales by symbols, not a
-# fixed probe set). Same shape as semantic_dedup's n_cells="auto"
-# (clustering.py) and bloom_sizing's auto-m (sketches.py). The 4096 ceiling
-# matches the quantizer's training reservoir: beyond it, cells grow again
-# (N/4096 rows each), which is the right degradation — centroid ranking
-# per query stays a bounded GEMM and candidate volume stays N/4096 x
-# n_probe, still a 256x cut at any N.
+# (hard-negative mining probes anchors ∝ corpus). Same shape as
+# semantic_dedup's n_cells="auto" (clustering.py) and bloom_sizing's auto-m
+# (sketches.py). The 4096 ceiling matches the quantizer's training
+# reservoir: beyond it, cells grow again (N/4096 rows each), which is the
+# right degradation — centroid ranking per query stays a bounded GEMM and
+# candidate volume stays N/4096 x n_probe, still a 256x cut at any N.
 IVF_TARGET_CELL_ROWS = 256
 
 
@@ -196,11 +226,24 @@ def _resolve_n_lists(corpus: DataFrame, n_lists: int | str) -> int:
     return int(n_lists)
 
 
-def _auto_train_cap(n_lists: int) -> int:
-    """Training reservoir sized to the list count: Lloyd's wants >=~16
-    samples per centroid or empty-cell respawns dominate; capped so the
-    driver-side GEMM stays seconds even at the 4096-list ceiling."""
-    return max(4096, min(16 * n_lists, 65536))
+def _lloyd(mat, k, rng, max_iter):
+    """Lloyd's k-means on the rows of ``mat``: seeds are k distinct rows
+    drawn by ``rng``, an empty cell respawns at a random row. Returns the
+    (min(k, rows) × dim) centroid matrix."""
+    import numpy as np
+
+    cent = mat[rng.choice(len(mat), size=min(k, len(mat)), replace=False)]
+    for _ in range(max_iter):
+        # |x-c|^2 = |x|^2 - 2 x·c + |c|^2, and |x|^2 is constant per row
+        assign = np.argmin(
+            -2.0 * (mat @ cent.T) + (cent * cent).sum(axis=1), axis=1
+        )
+        for j in range(len(cent)):
+            members = mat[assign == j]
+            cent[j] = members.mean(axis=0) if len(members) else mat[
+                rng.integers(len(mat))
+            ]
+    return cent
 
 
 def _train_centroids(corpus, vec_col, n_lists, seed, max_iter, train_cap=4096):
@@ -212,20 +255,7 @@ def _train_centroids(corpus, vec_col, n_lists, seed, max_iter, train_cap=4096):
     mat = np.stack(
         corpus.select(vec_col).limit(train_cap).toPandas()[vec_col].to_numpy()
     ).astype(np.float64)
-    k_eff = min(n_lists, len(mat))
-    rng = np.random.default_rng(seed)
-    cent = mat[rng.choice(len(mat), size=k_eff, replace=False)]
-    for _ in range(max_iter):
-        # Lloyd step via |x-c|^2 = |x|^2 - 2 x·c + |c|^2 (|x|^2 constant per row)
-        assign = np.argmin(
-            -2.0 * (mat @ cent.T) + (cent * cent).sum(axis=1), axis=1
-        )
-        for j in range(k_eff):
-            members = mat[assign == j]
-            cent[j] = members.mean(axis=0) if len(members) else mat[
-                rng.integers(len(mat))
-            ]
-    return cent
+    return _lloyd(mat, n_lists, np.random.default_rng(seed), max_iter)
 
 
 def _cell_udf(corpus, cent):
@@ -250,6 +280,17 @@ def _cell_udf(corpus, cent):
     return pandas_udf(_cell_fn, "int")
 
 
+def _quantizer(corpus, vec_col, n_lists, seed, max_iter):
+    """The IVF coarse quantizer: resolve ``n_lists``, train on a reservoir
+    sized to it (Lloyd's wants >=~16 samples per centroid or empty-cell
+    respawns dominate; capped so the driver-side GEMM stays seconds at the
+    4096-list ceiling) and return (centroids, cell-assignment UDF)."""
+    n_lists = _resolve_n_lists(corpus, n_lists)
+    train_cap = max(4096, min(16 * n_lists, 65536))
+    cent = _train_centroids(corpus, vec_col, n_lists, seed, max_iter, train_cap)
+    return cent, _cell_udf(corpus, cent)
+
+
 def _probes_frame(queries, id_col, vec_col, cent, n_probe, cell_col):
     """Rank cells per query driver-side (query batch bounded by contract,
     centroid matrix tiny) and ship the exploded (query, probe-cell) frame.
@@ -259,9 +300,7 @@ def _probes_frame(queries, id_col, vec_col, cent, n_probe, cell_col):
     import numpy as np
 
     cent_n = cent / np.linalg.norm(cent, axis=1, keepdims=True)
-    qpdf = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-    ).toPandas()
+    qpdf = _queries(queries, id_col, vec_col).toPandas()
     qmat = np.stack(qpdf["__qvec"].to_numpy()).astype(np.float64)
     qmat /= np.linalg.norm(qmat, axis=1, keepdims=True)
     order = np.argsort(-(qmat @ cent_n.T), axis=1)[:, :n_probe]
@@ -273,17 +312,6 @@ def _probes_frame(queries, id_col, vec_col, cent, n_probe, cell_col):
         f"query_id {queries.schema[id_col].dataType.simpleString()}, "
         f"__qvec {vec_type}, __cells array<int>",
     ).select("query_id", "__qvec", F.explode("__cells").alias(cell_col))
-
-
-def _rank_top_k(scored, k):
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
 
 
 def ivf_top_k(
@@ -314,7 +342,6 @@ def ivf_top_k(
     assignment once with ``build_ivf_index`` and probe the cell-partitioned
     table (``ivf_probe_persisted``) instead.
     """
-    n_lists = _resolve_n_lists(corpus, n_lists)
     scored = _ivf_scored(
         corpus, queries, n_lists, n_probe, id_col, vec_col, seed, max_iter
     )
@@ -325,27 +352,11 @@ def _ivf_scored(
     corpus, queries, n_lists, n_probe, id_col, vec_col, seed, max_iter
 ) -> DataFrame:
     """Shared IVF candidate-scoring plan: (query_id, neighbor_id, __sim)
-    for every corpus vector in the query's probed cells. Callers resolve
-    ``n_lists`` first (explicit int here); the training reservoir scales
-    with it so large auto-sized quantizers still see >=~16 rows/centroid."""
-    cent = _train_centroids(
-        corpus, vec_col, n_lists, seed, max_iter,
-        train_cap=_auto_train_cap(n_lists),
-    )
-    _cell = _cell_udf(corpus, cent)
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cvec"),
-        _cell(F.col(vec_col)).alias("__cell"),
-    )
+    for every corpus vector in the query's probed cells."""
+    cent, cell = _quantizer(corpus, vec_col, n_lists, seed, max_iter)
+    c = _corpus(corpus, id_col, vec_col, cell(F.col(vec_col)).alias("__cell"))
     probes = _probes_frame(queries, id_col, vec_col, cent, n_probe, "__cell")
-    return c.join(F.broadcast(probes), ["__cell"]).filter(
-        F.col("neighbor_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        cosine(F.col("__qvec"), F.col("__cvec")).alias("__sim"),
-    )
+    return _scored(_candidates(c, probes, "__cell"))
 
 
 def quantize_int8(vec: Column, scale: Column) -> Column:
@@ -391,27 +402,21 @@ def build_ivf_index(
     sidecar centroids assigns every vector to the same cell it already
     lives in, so rebuilds never drift the cell structure (and
     ivf_index_append's incremental result can be byte-compared against
-    a from-scratch rebuild in tests)."""
+    a from-scratch rebuild in tests). ``n_lists`` is ignored then — the
+    sidecar IS the cell structure, auto-built or explicit alike."""
     import json
     import os
 
     import numpy as np
 
     if centroids is not None:
-        # pinned quantizer (rebuild/compaction path): n_lists is ignored —
-        # the sidecar IS the cell structure, auto-built or explicit alike,
-        # so ivf_index_append keeps working against auto-sized indexes.
         cent = np.asarray(centroids, dtype=np.float64)
+        cell = _cell_udf(corpus, cent)
     else:
-        n_lists = _resolve_n_lists(corpus, n_lists)
-        cent = _train_centroids(
-            corpus, vec_col, n_lists, seed, max_iter,
-            train_cap=_auto_train_cap(n_lists),
-        )
-    _cell = _cell_udf(corpus, cent)
+        cent, cell = _quantizer(corpus, vec_col, n_lists, seed, max_iter)
     (
         corpus.select(
-            F.col(id_col), F.col(vec_col), _cell(F.col(vec_col)).alias("cell")
+            F.col(id_col), F.col(vec_col), cell(F.col(vec_col)).alias("cell")
         )
         .write.mode("overwrite")
         .partitionBy("cell")
@@ -501,17 +506,8 @@ def ivf_probe_persisted(
     vectors = spark.read.parquet(os.path.join(index_path, "vectors")).filter(
         F.col("cell").isin(needed)
     )
-    scored = (
-        vectors.withColumnRenamed(id_col, "neighbor_id")
-        .join(F.broadcast(probes), ["cell"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("__qvec"), F.col(vec_col)).alias("__sim"),
-        )
-    )
-    return _rank_top_k(scored, k)
+    c = _corpus(vectors, id_col, vec_col, "cell")
+    return _rank_top_k(_scored(_candidates(c, probes, "cell")), k)
 
 
 def hard_negative_top_k(
@@ -529,19 +525,7 @@ def hard_negative_top_k(
     yields k genuine negatives, unlike top-k-then-filter). Same
     brute-force shape as cosine_top_k; swap the corpus for an ANN
     candidate set at scale."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qvec")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cvec")
-    )
-    scored = c.join(
-        F.broadcast(q), F.col("neighbor_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "neighbor_id",
-        cosine(F.col("__qvec"), F.col("__cvec")).alias("__sim"),
-    )
+    scored = _brute_scored(corpus, queries, id_col, vec_col)
     return _rank_top_k(scored.filter(F.col("__sim") < max_sim), k)
 
 
@@ -568,7 +552,6 @@ def hard_negative_top_k_ivf(
     every other all-pairs family already ships. ``n_lists="auto"`` keeps
     that cut proportional as the corpus grows — with anchors ∝ corpus and
     lists pinned, candidate volume would be N²·n_probe/n_lists."""
-    n_lists = _resolve_n_lists(corpus, n_lists)
     scored = _ivf_scored(
         corpus, queries, n_lists, n_probe, id_col, vec_col, seed, max_iter
     )

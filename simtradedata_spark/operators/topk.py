@@ -9,6 +9,8 @@ single-node shuffle, safe at any scale. Per-group top-k is a rank window
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -185,7 +187,10 @@ def multi_ntile(
     # expression tree, ~1 py4j call instead of ~3·num_buckets.
     n_bkts: dict[str, int] = {}
     for (c, (_, _)), bounds in zip(specs.items(), qs):
-        uniq = sorted(set(bounds))
+        # a non-finite bound (±inf proxy values) has no SQL literal; dropping
+        # it merges two adjacent buckets, which keeps tiles exact — they come
+        # from the global rank, the buckets only balance the work
+        uniq = sorted({b for b in bounds if math.isfinite(b)})
         n_bkts[c] = len(uniq) + 1
         terms = " + ".join(
             f"CAST(({proxy_cols[c]} > {b!r}D) AS INT)" for b in uniq

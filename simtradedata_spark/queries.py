@@ -8493,30 +8493,27 @@ QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] 
 # `train_val_test_split`, leaving all market/indicator oracles unchecked
 # by the driver. Entries not listed keep their relative order after these.
 _FRONT_WINDOW = [
-    # Round-11 rotation. Membership is MECHANICALLY checked by
-    # tools/window_lint.py (definition-granular taint from the round's git
-    # diff, TRANSITIVE through callees); run it after any code change.
-    #   1-32  every query the r11 optimization diff taints: the funnel GC
-    #         nudge + big_input_session rewrite (funnel, minhash family),
-    #         fast_lit at the pq/kmeans/LSH literal sites, the
-    #         fundamentals SQL-expr rewrite (whole asof-statement family),
-    #         calendar-constant/stock_metadata changes (sort_msg_industry,
-    #         cb_info), and the HOF let-binding fixes (boilerplate_lines,
-    #         quantized_embeddings).
-    #   +5    the r10-touched queries the r10 window could not hold and
-    #         the r11 diff does not re-taint (r10 verdict item 2):
-    #         bpe_merges, bpe_token_counts, classifier_eval,
-    #         logit_training, plus label_centroids (flagged alongside
-    #         the kmeans-literal audit in the r10 ADVICE).
-    #   +13   the stalest-certified entries (all 8 remaining r06-certified
-    #         queries — closing the r06 staleness backlog — and 5 r07
-    #         ones), so the staleness minimum advances to r07.
+    # Rotation after the one-top-k-path change to operators/similarity.py
+    # and operators/pq.py. Membership is MECHANICALLY checked by
+    # tools/window_lint.py (definition-granular taint from the git diff
+    # since the round-11 snapshot, TRANSITIVE through callees); run it
+    # after any code change.
+    #   19    every query that diff taints: the ANN family (cosine_top5,
+    #         lsh_ann_top5, ivf_ann_top5, hard_negatives, pq_ann_top5), the
+    #         big_input_session callers (minhash/CC family, funnel), the
+    #         fast_lit users (kmeans, LSH literals, bloom_decontam,
+    #         rfm_segments, customer_spend_deciles, curriculum_buckets,
+    #         cluster_balanced_sample) and global_cumsum (sequence_packing).
+    #   +1    dsir_selection, changed after the round-11 rotation and so
+    #         far certified only locally.
+    #   +30   carried from the round-11 rotation; the five asof statement
+    #         queries it certified last (balance, cashflow, debt-paying,
+    #         growth, operating) made room for the additions.
     "adjusted_bars_post",
-    "balance_statement_asof",
+    "bloom_decontam",
     "boilerplate_lines",
     "bpe_merges",
     "bpe_token_counts",
-    "cashflow_statement_asof",
     "cb_info",
     "classifier_eval",
     "cluster_balanced_sample",
@@ -8528,28 +8525,29 @@ _FRONT_WINDOW = [
     "curriculum_buckets",
     "customer_spend_deciles",
     "customers_without_orders",
-    "debt_paying_ability_asof",
     "dedup_clusters",
     "dedup_lineitem_first",
+    "dsir_selection",
     "embedding_dup_clusters",
     "eps_asof",
     "exact_substr_trim",
     "full_curation_funnel",
     "fundamentals_asof",
-    "growth_ability_asof",
+    "hard_negatives",
     "income_statement_asof",
+    "ivf_ann_top5",
     "kmeans_clusters",
     "label_centroids",
     "logit_training",
     "lsh_ann_top5",
     "minhash_near_dups",
-    "operating_ability_asof",
     "pq_ann_top5",
     "profit_ability_asof",
     "quality_scores",
     "quantized_embeddings",
     "rfm_segments",
     "semantic_dedup",
+    "sequence_packing",
     "sessionize_users",
     "sort_msg_industry",
     "statements_by_year",

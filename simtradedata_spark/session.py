@@ -62,45 +62,27 @@ def derive_shuffle_partitions(input_bytes: int, cores: int) -> int:
 # replicas where the eager-checkpoint paths measurably win (the ~10 GB
 # shingle-explode shuffle, r7-r9 disk walls) sit 3-30x above it.
 BIG_INPUT_BYTES = 512 * 1024 * 1024
+INPUT_BYTES_KEY = "spark.simtradedata.inputBytes"
 
 
 def big_input_session(spark: SparkSession) -> bool:
     """True when THIS session's input outgrew the certification scale.
 
-    Primary signal: ``spark.simtradedata.inputBytes`` — the actual
-    compressed input size ``get_spark(input_dir=...)`` measured at session
-    build time (callers that construct their own session can set the same
-    key) — compared against the absolute ``BIG_INPUT_BYTES`` threshold, so
-    the answer keys on DATA SIZE, not conf provenance or core count.
-
-    Fallback (sessions without the key): an EXPLICITLY-set
-    ``spark.sql.shuffle.partitions`` above ``defaultParallelism`` — someone
-    derived a higher-than-cores shuffle ceiling from their input, which
-    only happens past ~16 MB·cores of compressed input. An unset/default
-    conf means nobody derived it, so the session is treated as small: on a
-    third-party session Spark's untouched default ('200' > local cores)
-    must NOT route tiny inputs through the big-input paths (eager
-    checkpoints cost ~2 s each at certification scale while buying
-    nothing). Used by the minhash checkpoint gate (operators/dedup.py);
-    the curation-chain barrier GC nudge (operators/pipeline.py) is
-    deliberately NOT gated on this since r11."""
-    v = spark.conf.get("spark.simtradedata.inputBytes", None)
-    if v is not None:
-        try:
-            return int(v) >= BIG_INPUT_BYTES
-        except ValueError:
-            pass  # malformed — fall through to the conf-provenance signal
-    # Read the BUILD-TIME (static SparkConf) value, not the runtime SQL
-    # conf: builder.getOrCreate() on an existing session APPLIES runtime
-    # SQL confs, so a later get_spark() with a different core count
-    # silently rewrites the runtime shuffle.partitions and would flip this
-    # signal (observed: an 8-core session read back '32' after a reused
-    # 32-core builder). Provenance means what the session was DERIVED with.
-    sc = spark.sparkContext
-    conf = sc.getConf()
-    return conf.contains("spark.sql.shuffle.partitions") and int(
-        conf.get("spark.sql.shuffle.partitions")
-    ) > sc.defaultParallelism
+    The one signal is ``spark.simtradedata.inputBytes`` — the compressed
+    input size ``get_spark(input_dir=...)`` measured at session build time
+    — compared against the absolute ``BIG_INPUT_BYTES`` threshold, so the
+    answer keys on DATA SIZE, not conf provenance or core count. A session
+    without the key is small (callers that build their own session set the
+    key themselves, see ``get_spark``); a value that is not an int raises
+    ``ValueError``. Used by the minhash checkpoint gate
+    (operators/dedup.py)."""
+    v = spark.conf.get(INPUT_BYTES_KEY, None)
+    if v is None:
+        return False
+    try:
+        return int(v) >= BIG_INPUT_BYTES
+    except ValueError:
+        raise ValueError(f"{INPUT_BYTES_KEY}={v!r} is not an int") from None
 
 
 def get_spark(
@@ -119,6 +101,12 @@ def get_spark(
       - Arrow: vectorizes the pandas-UDF slow path (indicators, as-of fallback).
       - UTC timezone: parquet timestamps are naive; pinning UTC makes Spark
         and DuckDB read identical wall-clock values.
+
+    ``input_dir`` is measured and recorded as the runtime conf
+    ``spark.simtradedata.inputBytes`` (bytes of compressed input), which
+    ``big_input_session`` reads to route inputs above ``BIG_INPUT_BYTES``
+    through the big-input plans. A caller that builds its own session sets
+    that key to its input size; without it the session counts as small.
     """
     n = cpus or DEFAULT_CPUS
     # AQE COALESCES shuffle partitions downward from the initial value but
@@ -240,7 +228,7 @@ def get_spark(
         # Measured input size for big_input_session — the data-derived
         # scale signal the eager-checkpoint paths key on. Runtime (non-
         # static) conf, so getOrCreate applies it to a reused session too.
-        b = b.config("spark.simtradedata.inputBytes", str(input_bytes))
+        b = b.config(INPUT_BYTES_KEY, str(input_bytes))
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     spark = b.getOrCreate()

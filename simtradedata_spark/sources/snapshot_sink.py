@@ -9,8 +9,10 @@ atomic ``_CURRENT`` pointer) behind the engine's writer-commit protocol:
                uniquely-named parquet part file inside a staging dir and
                reports the file in its ``WriterCommitMessage``;
   driver     — ``commit(messages)`` publishes a NEW version directory
-               containing exactly the files of SUCCESSFUL tasks (plus, in
-               append mode, links to the previous version's files), then
+               ``v<n>`` (n = the committed version + 1, the numbering
+               ``list_versions``/``vacuum_versions`` read) containing
+               exactly the files of SUCCESSFUL tasks (plus, in append
+               mode, links to the previous version's files), then
                atomically repoints ``_CURRENT``; ``abort()`` discards the
                staging dir.
 
@@ -97,16 +99,16 @@ class SnapshotWriter(DataSourceWriter):
         return _PartFile(filename=name, rows=rows_written)
 
     # -- driver side -------------------------------------------------------
-    def _current_version(self) -> str | None:
-        ptr = os.path.join(self.path, "_CURRENT")
-        if not os.path.exists(ptr):
-            return None
-        with open(ptr) as fh:
-            return fh.read().strip()
-
     def commit(self, messages) -> None:
-        version = f"v{uuid.uuid4().hex[:12]}"
-        final = os.path.join(self.path, version)
+        from simtradedata_spark.streaming.incremental import (
+            _committed_batch,
+            _repoint,
+        )
+
+        prev = _committed_batch(self.path)
+        final = os.path.join(self.path, f"v{prev + 1:012d}")
+        # no exist_ok: a writer racing for the same version fails here
+        # instead of overwriting the other's snapshot
         os.makedirs(final)
         # only files from SUCCESSFUL tasks — retried-task orphans stay in
         # staging and are deleted with it.
@@ -115,19 +117,11 @@ class SnapshotWriter(DataSourceWriter):
                 os.path.join(self.staging, m.filename),
                 os.path.join(final, m.filename),
             )
-        if not self.overwrite:
-            prev = self._current_version()
-            if prev is not None:
-                prev_dir = os.path.join(self.path, prev)
-                for f in os.listdir(prev_dir):
-                    os.link(
-                        os.path.join(prev_dir, f), os.path.join(final, f"prev-{f}")
-                    )
-        ptr = os.path.join(self.path, "_CURRENT")
-        tmp = ptr + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(version)
-        os.replace(tmp, ptr)  # atomic repoint = the commit
+        if not self.overwrite and prev >= 0:
+            prev_dir = os.path.join(self.path, f"v{prev:012d}")
+            for f in os.listdir(prev_dir):
+                os.link(os.path.join(prev_dir, f), os.path.join(final, f"prev-{f}"))
+        _repoint(self.path, prev + 1)  # atomic repoint = the commit
         shutil.rmtree(self.staging, ignore_errors=True)
 
     def abort(self, messages) -> None:

@@ -379,11 +379,17 @@ def upsert_batch(
 
 def _publish_version(df: DataFrame, target: str, batch_id: int) -> None:
     """Write a new snapshot dir and atomically repoint ``_CURRENT``."""
-    version = f"v{batch_id:012d}"
-    df.write.mode("overwrite").parquet(os.path.join(target, version))
+    df.write.mode("overwrite").parquet(os.path.join(target, f"v{batch_id:012d}"))
+    _repoint(target, batch_id)
+
+
+def _repoint(target: str, batch_id: int) -> None:
+    """Atomically point ``_CURRENT`` at the ``v<batch_id>`` directory — the
+    commit of every writer of the store (``_publish_version`` and the
+    ``simtrade_snapshot`` sink)."""
     tmp = _snapshot_pointer(target) + ".tmp"
     with open(tmp, "w") as fh:
-        fh.write(version)
+        fh.write(f"v{batch_id:012d}")
     os.replace(tmp, _snapshot_pointer(target))
 
 

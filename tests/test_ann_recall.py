@@ -189,3 +189,17 @@ def test_hard_negatives_ivf_auto_recall_floor_10x(corpus_10x):
     )
     assert len(got) == len(brute)
     assert len(got & brute) / len(brute) >= 0.45
+
+
+def test_one_top_k_path_guard():
+    """similarity.py and pq.py keep one per-query ranker (_rank_top_k) and
+    one Lloyd loop (_lloyd, whose seed draw is the one rng.choice)."""
+    from pathlib import Path
+
+    from simtradedata_spark.operators import pq, similarity
+
+    src = "".join(
+        Path(m.__file__).read_text() for m in (similarity, pq)
+    )
+    assert src.count('Window.partitionBy("query_id")') == 1
+    assert src.count("rng.choice(") == 1

@@ -52,3 +52,23 @@ def test_rejects_empty_and_nonfinite():
         fast_lit([1.0, float("inf")])
     with pytest.raises(TypeError):
         fast_lit([object()])
+
+
+def test_decimals_render_exact(spark):
+    from decimal import Decimal
+
+    vals = [Decimal("12345678901234567890"), Decimal("-0.125"), Decimal("1E+3")]
+    row = spark.range(1).select(fast_lit(vals).alias("v")).first()
+    assert list(row["v"]) == vals
+    with pytest.raises(ValueError, match="non-finite"):
+        fast_lit([Decimal("NaN")])
+
+
+def test_ident_quotes_names(spark):
+    from simtradedata_spark.functions.lits import ident
+
+    df = spark.range(2).select(
+        F.col("id").alias("tok count"), F.col("id").alias("a`b")
+    )
+    got = df.selectExpr(f"{ident('tok count')} + {ident('a`b')} AS s").collect()
+    assert [r["s"] for r in got] == [0, 2]

@@ -518,8 +518,8 @@ def test_lsh_multi_probe_improves_recall(spark):
 
 def test_multi_ntile_matches_window(spark):
     """multi_ntile's one-job/three-orderings path ≡ single-partition
-    F.ntile for every spec, including ties, N % n != 0, and a
-    fewer-rows-than-tiles frame."""
+    F.ntile for every spec, including ties, N % n != 0, ±inf proxy values
+    (non-finite split points) and a fewer-rows-than-tiles frame."""
     from pyspark.sql.window import Window
 
     from simtradedata_spark.operators.topk import multi_ntile
@@ -533,14 +533,19 @@ def test_multi_ntile_matches_window(spark):
             "b": rng.normal(size=n),
         }
     )
+    pdf["c"] = rng.normal(size=n)
+    pdf.loc[:69, "c"] = np.inf  # enough rows that upper split points are inf
+    pdf.loc[70:79, "c"] = -np.inf
     sdf = spark.createDataFrame(pdf)
     wa = Window.orderBy(F.col("a"), F.col("id"))
     wb = Window.orderBy(F.col("b"), F.col("id"))
+    wc = Window.orderBy(F.col("c"), F.col("id"))
     expect = (
         sdf.select(
             "id",
             F.ntile(5).over(wa).alias("ta"),
             F.ntile(7).over(wb).alias("tb"),
+            F.ntile(6).over(wc).alias("tc"),
         )
         .toPandas()
         .set_index("id")
@@ -554,20 +559,22 @@ def test_multi_ntile_matches_window(spark):
             num_buckets=8,
         )
     )
+    got = multi_ntile(
+        got,
+        7,
+        {"tb": (F.col("b"), ["b", "id"])},
+        num_buckets=8,
+    )
     got = (
-        multi_ntile(
-            got,
-            7,
-            {"tb": (F.col("b"), ["b", "id"])},
-            num_buckets=8,
-        )
-        .select("id", "ta", "tb")
+        multi_ntile(got, 6, {"tc": (F.col("c"), ["c", "id"])}, num_buckets=8)
+        .select("id", "ta", "tb", "tc")
         .toPandas()
         .set_index("id")
         .sort_index()
     )
     assert (got["ta"] == expect["ta"]).all()
     assert (got["tb"] == expect["tb"]).all()
+    assert (got["tc"] == expect["tc"]).all()
     # fewer rows than tiles
     few = spark.createDataFrame([(float(i), i) for i in range(3)], "v double, id int")
     r = {

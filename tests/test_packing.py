@@ -57,3 +57,23 @@ def test_pack_sequences_bins_are_contiguous(spark):
             # boundary at or after seq_len*b; totals can exceed seq_len but
             # can only undershoot for the final bin
             assert t > 0
+
+
+def test_global_cumsum_quoted_name_and_decimal_values(spark):
+    """A value column whose name needs backticks, and a decimal one (its
+    per-bucket totals come back as Decimal), both match the serial
+    window."""
+    df = spark.range(0, 400).select(
+        F.col("id"),
+        (F.col("id") % 13 + 1).alias("tok count"),
+        (F.col("id") % 11 + 1).cast("decimal(10,0)").alias("dec"),
+    )
+    w = Window.orderBy("id").rowsBetween(Window.unboundedPreceding, 0)
+    for col in ("tok count", "dec"):
+        serial = df.select(
+            "id", F.sum(F.col(col)).over(w).cast("long").alias("expect")
+        )
+        got = global_cumsum(df, ["id"], col, out_col="cum", num_buckets=8)
+        joined = got.join(serial, "id")
+        assert joined.count() == 400
+        assert joined.filter(F.col("cum") != F.col("expect")).count() == 0

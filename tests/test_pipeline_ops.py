@@ -178,6 +178,30 @@ def test_connected_components_chain_and_triangle(spark):
     assert all(r["cluster_id"] == comp[r["doc_id"]] for r in clusters)
 
 
+def test_connected_components_round_checkpoints_fully_cached(spark):
+    """Each round's label checkpoint is lazy; the round's changed-label
+    count is its first action and materializes it, so the next round's two
+    joins read cached blocks instead of racing to compute them. When the
+    call returns — before any action on its result — every RDD it
+    persisted is cached in full."""
+    from simtradedata_spark.operators.graph import connected_components
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    # a 12-node chain needs ~11 propagation rounds
+    edges = spark.range(11).select(
+        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
+    )
+    labels = connected_components(edges)
+    new = set(jsc.getPersistentRDDs().keySet()) - before
+    assert len(new) >= 4, new  # edges + init labels + >= 2 rounds
+    info = {i.id(): i for i in jsc.sc().getRDDStorageInfo()}
+    for rdd_id in new:
+        assert rdd_id in info, f"RDD {rdd_id} persisted but never cached"
+        assert info[rdd_id].numCachedPartitions() == info[rdd_id].numPartitions()
+    assert {r["comp"] for r in labels.collect()} == {0}
+
+
 def test_chunk_documents_edges(spark):
     """Chunk boundaries: short doc -> one chunk; exact-multiple lengths;
     overlap reconstruction (consecutive chunks share `overlap` tokens)."""

@@ -155,7 +155,11 @@ def test_snapshot_sink_pointer_commit(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from simtradedata_spark.sources.snapshot_sink import SnapshotDataSource
-    from simtradedata_spark.streaming.incremental import read_current
+    from simtradedata_spark.streaming.incremental import (
+        list_versions,
+        read_current,
+        vacuum_versions,
+    )
 
     spark.dataSource.register(SnapshotDataSource)
     target = str(tmp_path / "snap")
@@ -180,6 +184,13 @@ def test_snapshot_sink_pointer_commit(spark, tmp_path):
     import os
 
     assert not [p for p in os.listdir(target) if p.startswith("_staging")]
+
+    # the sink numbers versions like upsert_batch does, so the store's
+    # retention tools read it: vacuum keeps only what _CURRENT needs
+    assert list_versions(target) == [0, 1, 2]
+    assert vacuum_versions(target, keep=1) == [0, 1]
+    assert list_versions(target) == [2]
+    assert read_current(spark, target).count() == 7
 
 
 def test_python_datasource_streams_one_day_per_batch(spark, tmp_path):

@@ -77,17 +77,16 @@ def test_big_input_session_keys_on_input_bytes(spark):
         # the 10x replica ~175 MB)
         spark.conf.set(key, str(175 * MB))
         assert big_input_session(spark) is False
-        # malformed value falls back to the conf-provenance signal, which
-        # is False here (explicit partitions == cores)
+        # a malformed value is an error naming the key, not a guess
         spark.conf.set(key, "garbage")
-        assert big_input_session(spark) is False
+        with pytest.raises(ValueError, match=key):
+            big_input_session(spark)
     finally:
         spark.conf.unset(key)
 
 
-def test_big_input_session_conf_fallback_without_input_bytes(spark):
-    # no inputBytes key: the explicit shuffle.partitions-vs-cores fallback
-    # (this session: 8 == 8 -> small)
+def test_big_input_session_without_input_bytes_is_small(spark):
+    # no inputBytes key: small, whatever the shuffle-partition conf says
     assert spark.conf.get("spark.simtradedata.inputBytes", None) is None
     assert big_input_session(spark) is False
 
